@@ -915,6 +915,8 @@ class TestBm25Scores:
         docs = documents(spark, SF_DIR)
         with _pytest.raises(ValueError):
             tx.bm25_scores(docs, [])
+        with _pytest.raises(ValueError, match="distinct"):
+            tx.bm25_scores(docs, ["spark", "join", "spark"])
         out = tx.bm25_scores(docs, ["spark", "join"])
         plan = out._jdf.queryExecution().executedPlan().toString()
         # global stats reach the per-doc rows via a broadcast of the
@@ -1288,14 +1290,20 @@ class TestBpeEmptyTokens:
 class TestPqDimGuard:
     def test_mismatched_dim_rejected(self, spark):
         """dim= must match the real embedding length: a silent slice
-        past (or short of) the vector end trains garbage codebooks
-        (review-found) — now a one-row probe raises up front."""
+        past (or short of) the vector end trains garbage codebooks — a
+        min/max length aggregate raises up front, also for a ragged
+        corpus whose first row has the right length."""
         emb = load(spark, SF_DIR, "embeddings")
         with pytest.raises(ValueError, match="components"):
             ann.pq_index(emb, m=8, dim=32)
         with pytest.raises(ValueError, match="components"):
             ann.pq_topk(emb, emb.limit(2).select(
                 F.col("vec_id").alias("qid"), "embedding"), k=3, dim=128)
+        ragged = spark.createDataFrame(
+            [(0, [1.0] * 32), (1, [1.0] * 32), (2, [1.0] * 31)],
+            "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError, match="31..32 components"):
+            ann.pq_index(ragged, m=8, dim=32)
 
 
 class TestBpeEncode:

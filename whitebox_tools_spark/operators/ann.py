@@ -375,12 +375,12 @@ def pq_index(
     c = corpus.select(F.col(record), as_double(F.col(vec)).alias("_v"))
     # dim must equal the ACTUAL embedding length: F.slice past the end
     # returns short/empty subvectors whose _sq_dist degenerates to 0.0,
-    # silently training garbage codebooks (review-found). One-row probe,
-    # not a per-row assert — index building is a one-off.
-    first = c.select(F.size("_v").alias("n")).first()
-    if first is not None and first["n"] != dim:
+    # silently training garbage codebooks. One min/max aggregate covers
+    # every row, so a ragged corpus is rejected too.
+    lo, hi = c.agg(F.min(F.size("_v")), F.max(F.size("_v"))).first()
+    if lo is not None and (lo != dim or hi != dim):
         raise ValueError(
-            f"pq_index dim={dim} but embeddings have {first['n']} "
+            f"pq_index dim={dim} but embeddings have {lo}..{hi} "
             "components — pass dim=<actual length>")
     sub_arr = F.array(
         *[F.slice(F.col("_v"), i * sub_len + 1, sub_len) for i in range(m)]

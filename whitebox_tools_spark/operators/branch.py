@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.graph import fixpoint
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro2 import d8_graph
 
 
@@ -30,7 +31,8 @@ def _path_closure(nodes: DataFrame, edges: DataFrame, max_rounds: int = 32):
     clo = ident.unionByName(
         edges.select(F.col("a").alias("src"), F.col("b").alias("cur"), F.col("len").alias("d"))
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def step(clo):
         ext = (
             clo.alias("l")
             .join(
@@ -43,19 +45,12 @@ def _path_closure(nodes: DataFrame, edges: DataFrame, max_rounds: int = 32):
                 (F.col("l.d") + F.col("r.d")).alias("d"),
             )
         )
-        nxt = (
-            clo.unionByName(ext)
-            .groupBy("src", "cur")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == clo.count():
-            clo = nxt
-            break
-        clo = nxt
-    else:
-        _warn_nonconverged("_path_closure", max_rounds)
-    return clo
+        return clo.unionByName(ext).groupBy("src", "cur").agg(F.min("d").alias("d"))
+
+    def new_pairs(new, old):
+        return new.join(old, ["src", "cur"], "left_anti")
+
+    return fixpoint(clo, step, new_pairs, max_rounds, "_path_closure")
 
 
 def max_branch_length(

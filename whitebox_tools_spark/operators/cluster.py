@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.graph import changed, fixpoint, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.localrel import local_df
 
@@ -124,23 +124,10 @@ def strahler_order(
             .select("id", F.coalesce(F.col("in_ord"), F.lit(1)).alias("ord"))
         )
 
-    order = nodes.select("id", F.lit(1).alias("ord"))
-    batch = 2  # two lazy rounds per checkpoint + convergence check
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        new_order = order
-        for _ in range(batch):
-            new_order = step(new_order)
-        new_order = new_order.transform(checkpoint_nostats)
-        changed = (
-            new_order.alias("n")
-            .join(order.alias("o"), "id")
-            .where(F.col("n.ord") != F.col("o.ord"))
-            .limit(1)
-            .count()
-        )
-        order = new_order
-        if changed == 0:
-            break
+    order = fixpoint(
+        nodes.select("id", F.lit(1).alias("ord")), step, changed("id", "ord"),
+        max_rounds, "strahler_order",
+    )
     return nodes.join(order, "id").select(
         "row", "col", F.col("ord").cast("double").alias("value")
     )

@@ -16,7 +16,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.graph import changed, expand, fixpoint, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
 
@@ -96,27 +96,7 @@ def cost_distance(
             .select("id", F.col("m.acc").alias("acc"), F.col("m.alloc").alias("alloc"))
         )
 
-    # Batch BATCH relaxations lazily between checkpoints: one materialize
-    # + one convergence-check action per batch instead of two actions per
-    # round. Each batched round is still one shuffle stage at execution;
-    # only the driver-side job count shrinks.
-    batch = 2
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = relax(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(
-                (F.col("n.acc") != F.col("o.acc"))
-                | (F.col("n.alloc") != F.col("o.alloc"))
-            )
-            .limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = fixpoint(cur, relax, changed("id", "acc", "alloc"), max_rounds, "cost_distance")
     return cells.join(cur, "id").select("row", "col", F.col("acc").alias("value"), "alloc")
 
 
@@ -158,30 +138,21 @@ def d8_mass_flux(
         "id", ((F.col("l") - F.col("ab")) * F.col("e")).alias("val")
     ).localCheckpoint(eager=True)
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(cur):
         influx = (
             edges.join(size_hint(cur, small), edges.a == cur.id)
             .groupBy("b")
             .agg(F.sum("val").alias("s"))
         )
-        nxt = (
-            base.join(size_hint(influx.withColumnRenamed("b", "id"), small), "id", "left")
-            .select(
-                "id",
-                (
-                    (F.coalesce("s", F.lit(0.0)) + F.col("l") - F.col("ab"))
-                    * F.col("e")
-                ).alias("val"),
-            )
-            .transform(checkpoint_nostats)
+        return base.join(
+            size_hint(influx.withColumnRenamed("b", "id"), small), "id", "left"
+        ).select(
+            "id",
+            ((F.coalesce("s", F.lit(0.0)) + F.col("l") - F.col("ab")) * F.col("e")).alias("val"),
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = fixpoint(cur, step, changed("id", "val"), max_rounds, "d8_mass_flux")
     return base.join(cur, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -202,11 +173,10 @@ def stream_payload_basins(
     sp = streams_payload.select(
         (F.col("row") * cfg.cols + F.col("col")).alias("id"), "payload"
     )
-    known = sp.localCheckpoint(eager=True)
-    frontier = known
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(400):
-        step = (
+
+    def step(frontier, known):
+        return (
             edges.join(size_hint(frontier, small), edges.b == frontier.id)
             .select(F.col("a").alias("id"), "payload")
             .join(
@@ -215,10 +185,8 @@ def stream_payload_basins(
                 "left_anti",
             )
         )
-        if step.limit(1).count() == 0:
-            break
-        known = known.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    known = expand(sp.localCheckpoint(eager=True), step, 400, "stream_payload_basins")
     return nodes.join(known, "id").select(
         "row", "col", F.col("payload").cast("double").alias("value")
     )

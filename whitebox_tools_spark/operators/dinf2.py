@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.graph import changed, fixpoint, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 # sector -> (n1 offset, n2 offset) as (drow, dcol), clockwise from north
@@ -98,20 +98,10 @@ def dinf_flow_accumulation(
             .select("id", (F.lit(1.0) + F.coalesce("s", F.lit(0.0))).alias("val"))
         )
 
-    cur = cells.select("id", F.lit(1.0).alias("val")).localCheckpoint(eager=True)
-    batch = 2  # two lazy rounds per checkpoint + convergence check
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = step(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = fixpoint(
+        cells.select("id", F.lit(1.0).alias("val")).localCheckpoint(eager=True),
+        step, changed("id", "val"), max_rounds, "dinf_flow_accumulation",
+    )
     return cells.join(cur, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -197,18 +187,8 @@ def dinf_mass_flux(
         )
 
     cur = base.select("id", ((F.col("l") - F.col("ab")) * F.col("e")).alias("val"))
-    cur = cur.localCheckpoint(eager=True)
-    batch = 2
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = step(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = fixpoint(
+        cur.localCheckpoint(eager=True), step, changed("id", "val"), max_rounds,
+        "dinf_mass_flux",
+    )
     return base.join(cur, "id").select("row", "col", F.col("val").alias("value"))

@@ -7,9 +7,25 @@ rounds instead of O(diameter) — each round is two shuffles
 (neighbour-min + jump), localCheckpoint'ed to keep lineage flat. This is
 the standard large-scale CC recipe (two-phase hash-to-min) expressed as
 plain DataFrame joins.
+
+Every convergence-bounded driver-side loop in ``operators/`` runs
+through the one round loop here, via two entry points:
+
+- ``fixpoint`` — value fixpoints: two lazy ``step``s per check, then
+  ``checkpoint_nostats`` and one ``limit(1).count()`` probe of
+  ``pending(new, old)`` (``changed`` builds the usual "any value differs
+  on key" test);
+- ``expand`` — semi-naive frontier walks: ``known |= step(frontier,
+  known)`` until a step adds nothing.
+
+A loop that spends its ``max_rounds`` without converging warns
+``not converged`` (RuntimeWarning); no result is silently partial.
 """
 
 from __future__ import annotations
+
+import warnings
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -72,25 +88,78 @@ def connected_components(
             )
         )
 
-    # two propagate+jump rounds per checkpoint/convergence-check: halves
-    # the driver-side action count (a converged extra round is idempotent)
-    batch = 2
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        jumped = labels
-        for _ in range(batch):
-            jumped = step(jumped)
-        jumped = checkpoint_nostats(jumped)
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
+    return fixpoint(
+        labels, step, changed("node", "comp"), max_rounds, "connected_components"
+    )
+
+
+def _warn_nonconverged(name: str, rounds: int) -> None:
+    """A loop exhausted its round budget without converging — the result
+    is partial. Loud, not silent."""
+    warnings.warn(
+        f"{name}: fixpoint not converged after {rounds} rounds; "
+        "result may be partial — raise max_rounds",
+        RuntimeWarning,
+        stacklevel=4,
+    )
+
+
+def _empty(df: DataFrame) -> bool:
+    return df.limit(1).count() == 0
+
+
+def _rounds(state, advance, max_rounds: int, name: str, stride: int = 1):
+    """The one bounded round loop: ``advance(state) -> (state, done)``
+    runs once per ``stride`` rounds of the ``max_rounds`` budget. Spending
+    the budget without ``done`` warns (see ``_warn_nonconverged``)."""
+    for _ in range(max(1, -(-max_rounds // stride))):
+        state, done = advance(state)
+        if done:
+            return state
+    _warn_nonconverged(name, max_rounds)
+    return state
+
+
+def changed(key, *cols: str):
+    """``pending`` for ``fixpoint``: rows of ``new`` whose ``cols`` differ
+    from ``old`` on the join ``key``."""
+
+    def pending(new: DataFrame, old: DataFrame) -> DataFrame:
+        diff = reduce(
+            lambda a, b: a | b, [F.col(f"n.{c}") != F.col(f"o.{c}") for c in cols]
         )
-        labels = jumped
-        if changed == 0:
-            break
-    return labels
+        return new.alias("n").join(old.alias("o"), key).where(diff)
+
+    return pending
+
+
+def fixpoint(init: DataFrame, step, pending, max_rounds: int, name: str) -> DataFrame:
+    """Iterate ``step`` from ``init`` until ``pending(new, old)`` is empty.
+
+    Each check composes two lazy steps (two rounds of the budget),
+    checkpoints them and probes ``pending`` once — half the driver-side
+    actions of a check per step (a converged extra step is idempotent)."""
+
+    def advance(old):
+        new = checkpoint_nostats(step(step(old)))
+        return new, _empty(pending(new, old))
+
+    return _rounds(init, advance, max_rounds, name, stride=2)
+
+
+def expand(seed: DataFrame, step, max_rounds: int, name: str) -> DataFrame:
+    """Semi-naive frontier walk from ``seed``: ``new = step(frontier,
+    known)`` must return only rows not yet in ``known``; the walk stops
+    when a step is empty and returns ``known`` (seed plus every step)."""
+
+    def advance(state):
+        known, frontier = state
+        new = checkpoint_nostats(step(frontier, known))
+        if _empty(new):
+            return state, True
+        return (checkpoint_nostats(known.unionByName(new)), new), False
+
+    return _rounds((seed, seed), advance, max_rounds, name)[0]
 
 
 def checkpoint_nostats(df: DataFrame) -> DataFrame:

@@ -221,16 +221,3 @@ def block_grid(
         .groupBy("row", "col")
         .agg(agg.alias("value"))
     )
-
-
-def _warn_nonconverged(name: str, rounds: int) -> None:
-    """Fixpoint loop exhausted its round budget without converging —
-    the result is partial. Loud, not silent (ADVICE r1)."""
-    import warnings
-
-    warnings.warn(
-        f"{name}: fixpoint not converged after {rounds} rounds; "
-        "result may be partial — raise max_rounds",
-        RuntimeWarning,
-        stacklevel=3,
-    )

@@ -41,10 +41,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.graph import (
-    checkpoint_nostats,
+    changed,
     connected_components,
+    fixpoint,
     size_hint,
 )
 
@@ -310,27 +311,10 @@ def d8_flow_accumulation(
             .select("id", (F.lit(1.0) + F.coalesce(F.col("inflow"), F.lit(0.0))).alias("acc"))
         )
 
-    acc = nodes.select("id", F.lit(1.0).alias("acc"))
-    batch = 2  # two lazy rounds per checkpoint + convergence check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        new_acc = acc
-        for _ in range(batch):
-            new_acc = _step(new_acc)
-        new_acc = new_acc.transform(checkpoint_nostats)
-        changed = (
-            new_acc.alias("n")
-            .join(acc.alias("o"), "id")
-            .where(F.col("n.acc") != F.col("o.acc"))
-            .limit(1)
-            .count()
-        )
-        acc = new_acc
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("d8_flow_accumulation", max_rounds)
+    acc = fixpoint(
+        nodes.select("id", F.lit(1.0).alias("acc")), _step, changed("id", "acc"),
+        max_rounds, "d8_flow_accumulation",
+    )
     return nodes.join(acc, "id").select("row", "col", F.col("acc").alias("value"))
 
 
@@ -405,22 +389,10 @@ def watershed(
             ).alias("ptr"),
         )
 
-    batch = 2  # two lazy pointer jumps per checkpoint + check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        new_state = state
-        for _ in range(batch):
-            new_state = _jump(new_state)
-        new_state = new_state.transform(checkpoint_nostats)
-        remaining = new_state.where(
-            F.col("label").isNull() & F.col("ptr").isNotNull()
-        ).limit(1).count()
-        state = new_state
-        if remaining == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("watershed", max_rounds)
+    def _unresolved(new, old):
+        return new.where(F.col("label").isNull() & F.col("ptr").isNotNull())
+
+    state = fixpoint(state, _jump, _unresolved, max_rounds, "watershed")
     return state.where(F.col("label").isNotNull()).select(
         "row", "col", F.col("label").alias("value")
     )

@@ -28,11 +28,13 @@ import numpy as np
 
 from whitebox_tools_spark.operators.focal import focal_apply
 from whitebox_tools_spark.operators.graph import (
-    checkpoint_nostats,
+    changed,
     connected_components,
+    expand,
+    fixpoint,
     size_hint,
 )
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY, _d8_dir_stencil
 
 
@@ -212,26 +214,7 @@ def fill_depressions(
             ).alias("w"),
         )
 
-    batch = 2  # two lazy Planchon-Darboux lowerings per checkpoint + check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = w
-        for _ in range(batch):
-            nxt = _lower(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n")
-            .join(w.alias("o"), "id")
-            .where(F.col("n.w") != F.col("o.w"))
-            .limit(1)
-            .count()
-        )
-        w = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("fill_depressions", max_rounds)
+    w = fixpoint(w, _lower, changed("id", "w"), max_rounds, "fill_depressions")
     return w.select("row", "col", F.col("w").alias("value"))
 
 
@@ -343,61 +326,24 @@ def fd8_flow_accumulation(
     )
     acc = cells.select("id", F.lit(1.0).alias("val")).localCheckpoint(eager=True)
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(acc):
         up = (
             edges.join(size_hint(acc, small), edges.a == acc.id)
             .groupBy("b")
             .agg(F.sum(F.col("w") * F.col("val")).alias("s"))
         )
-        nxt = (
+        return (
             cells.select("id")
             .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
             .select("id", (F.lit(1.0) + F.coalesce("s", F.lit(0.0))).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n")
-            .join(acc.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val"))
-            .limit(1)
-            .count()
-        )
-        acc = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("fd8_flow_accumulation", max_rounds)
+
+    acc = fixpoint(acc, step, changed("id", "val"), max_rounds, "fd8_flow_accumulation")
     return cells.join(acc, "id").select("row", "col", F.col("val").alias("value"))
 
 
 # --------------------------------------------- flow-path length family
-
-
-def _upstream_len_fixpoint(nodes, edges, init_lit, agg_fn, max_rounds=100):
-    cur = nodes.select("id", init_lit.alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
-        up = (
-            edges.join(size_hint(cur, small), edges.a == cur.id)
-            .groupBy("b")
-            .agg(agg_fn(F.col("val") + F.col("len")).alias("s"))
-        )
-        nxt = (
-            nodes.select("id")
-            .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
-            .select("id", F.coalesce("s", init_lit).alias("val"))
-            .transform(checkpoint_nostats)
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("_upstream_len_fixpoint", max_rounds)
-    return cur
 
 
 def max_upslope_flowpath_length(
@@ -406,7 +352,22 @@ def max_upslope_flowpath_length(
     """MaxUpslopeFlowpathLength (max_upslope_flowpath.rs): longest D8
     flow path draining through each cell (ridge cells are 0)."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
-    vals = _upstream_len_fixpoint(nodes, edges, F.lit(0.0), F.max)
+    cur = nodes.select("id", F.lit(0.0).alias("val")).localCheckpoint(eager=True)
+    small = cur.count() <= 2_000_000
+
+    def step(cur):
+        up = (
+            edges.join(size_hint(cur, small), edges.a == cur.id)
+            .groupBy("b")
+            .agg(F.max(F.col("val") + F.col("len")).alias("s"))
+        )
+        return (
+            nodes.select("id")
+            .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
+            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
+        )
+
+    vals = fixpoint(cur, step, changed("id", "val"), 100, "max_upslope_flowpath_length")
     return nodes.join(vals, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -418,23 +379,18 @@ def downslope_flowpath_length(
     nodes, edges = d8_graph(raster, cfg, tile_size)
     cur = nodes.select("id", F.lit(0.0).alias("val")).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(100):
+
+    def step(cur):
         dn = edges.join(size_hint(cur, small), edges.b == cur.id).select(
             F.col("a").alias("id"), (F.col("val") + F.col("len")).alias("s")
         )
-        nxt = (
+        return (
             nodes.select("id")
             .join(dn, "id", "left")
             .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = fixpoint(cur, step, changed("id", "val"), 100, "downslope_flowpath_length")
     return nodes.join(cur, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -455,11 +411,10 @@ def _stream_relative(raster, streams, cfg, mode: str, tile_size: int = 128):
         .join(zmap, "id")
         .select("id", F.lit(0.0).alias("dist"), F.col("z").alias("sz"))
     )
-    known = scells.localCheckpoint(eager=True)
-    frontier = known
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(400):
-        step = (
+
+    def step(frontier, known):
+        return (
             edges.join(size_hint(frontier, small), edges.b == frontier.id)
             .select(
                 F.col("a").alias("id"),
@@ -472,11 +427,8 @@ def _stream_relative(raster, streams, cfg, mode: str, tile_size: int = 128):
                 "left_anti",
             )
         )
-        cnt = step.limit(1).count()
-        if cnt == 0:
-            break
-        known = known.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    known = expand(scells.localCheckpoint(eager=True), step, 400, f"_stream_relative({mode})")
     out = nodes.join(known, "id").join(zmap, "id")
     if mode == "dist":
         return out.select("row", "col", F.col("dist").alias("value"))
@@ -508,8 +460,9 @@ def basins(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> DataFram
         .localCheckpoint(eager=True)
     )
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(32):  # 2^32 path length bound
-        hop = nxt.alias("x").join(
+
+    def hop(nxt):
+        return nxt.alias("x").join(
             size_hint(
                 nxt.alias("y").select(
                     F.col("y.id").alias("nid"), F.col("y.nxt").alias("n2")
@@ -518,13 +471,9 @@ def basins(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> DataFram
             ),
             F.col("x.nxt") == F.col("nid"),
         ).select(F.col("x.id").alias("id"), F.col("n2").alias("nxt"))
-        changed = (
-            hop.alias("n").join(nxt.alias("o"), "id")
-            .where(F.col("n.nxt") != F.col("o.nxt")).limit(1).count()
-        )
-        nxt = hop.transform(checkpoint_nostats)
-        if changed == 0:
-            break
+
+    # 32 pointer doublings bound the path length by 2^32
+    nxt = fixpoint(nxt, hop, changed("id", "nxt"), 32, "basins")
     first = nxt.select("nxt").distinct()
     ranked = first.withColumn(
         "fid", F.row_number().over(Window.orderBy("nxt")).cast("double")
@@ -604,11 +553,10 @@ def trace_downslope_flowpaths(
     over (reach-set grows as path closure)."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
     seed_ids = seeds.select((F.col("row") * cfg.cols + F.col("col")).alias("id"))
-    reached = seed_ids.localCheckpoint(eager=True)
-    frontier = reached
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(400):
-        step = (
+
+    def step(frontier, reached):
+        return (
             edges.join(size_hint(frontier, small), edges.a == frontier.id)
             .select(F.col("b").alias("id"))
             .join(
@@ -618,10 +566,10 @@ def trace_downslope_flowpaths(
             )
             .distinct()
         )
-        if step.limit(1).count() == 0:
-            break
-        reached = reached.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    reached = expand(
+        seed_ids.localCheckpoint(eager=True), step, 400, "trace_downslope_flowpaths"
+    )
     return nodes.join(reached, "id", "left_semi").select(
         "row", "col", F.lit(1.0).alias("value")
     )
@@ -659,24 +607,16 @@ def breach_depressions(
     ).localCheckpoint(eager=True)
     m = z.select("id", F.col("z").alias("val")).localCheckpoint(eager=True)
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(m):
         up = (
             edges.join(size_hint(m, small), edges.a == m.id)
             .groupBy("b")
             .agg(F.min("val").alias("mn"))
         )
-        nxt = (
-            m.join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
-            .select("id", F.least(F.col("val"), F.coalesce("mn", "val")).alias("val"))
-            .transform(checkpoint_nostats)
+        return m.join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left").select(
+            "id", F.least(F.col("val"), F.coalesce("mn", "val")).alias("val")
         )
-        changed = (
-            nxt.alias("n").join(m.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        m = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("breach_depressions", max_rounds)
+
+    m = fixpoint(m, step, changed("id", "val"), max_rounds, "breach_depressions")
     return z.join(m, "id").select("row", "col", F.col("val").alias("value"))

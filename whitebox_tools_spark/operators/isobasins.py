@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.branch import _path_closure
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.graph import expand
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro2 import d8_graph
 
 IDX = [1, 1, 1, 0, -1, -1, -1, 0]
@@ -67,11 +68,12 @@ def isobasins(
         .localCheckpoint(eager=True)
     )
 
-    spark = raster.sparkSession
-    res = spark.createDataFrame([], "id long, fa long").localCheckpoint(eager=True)
-    marks = spark.createDataFrame([], "id long").localCheckpoint(eager=True)
     t = int(target_size)
-    for _ in range(max_rounds):
+
+    def peel(_frontier, res):
+        """One peel round: resolve every pending cell whose inflows are all
+        resolved — its outflow accumulation ``fa`` and the cut mark ``mk``
+        it places (the cell itself, or its child cut instead)."""
         pend = nodes.select("id").join(res.select("id"), "id", "left_anti")
         cand = (
             pend.join(iedges.withColumnRenamed("b", "id"), "id", "left")
@@ -97,10 +99,7 @@ def isobasins(
                 ).alias("inla"),
             )
             .where(F.col("n_in") == F.col("n_res"))
-            .localCheckpoint(eager=True)
         )
-        if cand.limit(1).count() == 0:
-            break
         over = F.col("fa_in") >= t
         has_child = F.col("inla").isNotNull()
         cut_at_child = (
@@ -114,20 +113,15 @@ def isobasins(
             .when(over, F.lit(1))
             .otherwise(F.col("fa_in"))
         )
-        res = res.unionByName(
-            cand.select("id", fa_out.alias("fa"))
-        ).localCheckpoint(eager=True)
-        new_marks = cand.where(cut_at_child).select(
-            F.col("inla.child").alias("id")
-        ).unionByName(
-            cand.where(over & ~cut_at_child).select("id")
-        )
-        marks = marks.unionByName(new_marks).distinct().localCheckpoint(eager=True)
-    else:
-        _warn_nonconverged("isobasins", max_rounds)
+        mark = F.when(cut_at_child, F.col("inla.child")).when(over, F.col("id"))
+        return cand.select("id", fa_out.alias("fa"), mark.alias("mk"))
 
+    none = raster.sparkSession.createDataFrame([], "id long, fa long, mk long")
+    res = expand(none.localCheckpoint(eager=True), peel, max_rounds, "isobasins")
     marks = (
-        marks.unionByName(nodes.where(F.col("dir") < 0).select("id"))
+        res.where(F.col("mk").isNotNull())
+        .select(F.col("mk").alias("id"))
+        .unionByName(nodes.where(F.col("dir") < 0).select("id"))
         .distinct()
         .localCheckpoint(eager=True)
     )

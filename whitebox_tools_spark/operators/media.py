@@ -10,13 +10,14 @@ pure-numpy 24-bit BMP parser (:func:`decode_bmp`), a full PNG codec
 grey/RGB/indexed/alpha, depths 1-16), a baseline JPEG codec
 (operators/jpeg_codec.py: T.81 Huffman + DCT, 4:4:4/4:2:0, restart
 markers), an animated GIF codec (operators/gif_codec.py: GIF-variant
-LZW, interlace, transparency + disposal compositing — the real
-frame-extraction path) and a RIFF/WAVE PCM-16 parser
-(:func:`decode_wav`) — so the end-to-end image, animation AND audio
-paths (encode -> binary column -> Arrow batch -> decode -> features)
-are genuinely exercised on real formats; only true video containers
-(ffmpeg) still raise NotImplementedError at the documented integration
-point.
+LZW, interlace, transparency + disposal compositing) and a RIFF/WAVE
+PCM-16 parser (:func:`decode_wav`). MJPEG-AVI video decodes too: the
+RIFF/AVI container parser (operators/avi_codec.py) hands each frame to
+the JPEG codec (:func:`decode_video_frames`). So the end-to-end image,
+animation, video AND audio paths (encode -> binary column -> Arrow
+batch -> decode -> features) are genuinely exercised on real formats;
+only inter-coded video (H.264 etc., which needs ffmpeg) still raises
+NotImplementedError at the documented integration point.
 """
 
 from __future__ import annotations

@@ -157,6 +157,7 @@ def downslope_index(
     angle = degrees(atan(drop / dist)), dist = flow-path distance to the
     first cell at least ``drop`` lower; cells whose path never drops that
     far are NoData."""
+    from whitebox_tools_spark.operators.graph import _empty, _rounds
     from whitebox_tools_spark.operators.hydro2 import d8_graph
 
     nodes, edges = d8_graph(raster, cfg, tile_size)
@@ -165,7 +166,6 @@ def downslope_index(
     )
     # frontier walk carrying (src, cur, dist); stop when z(src) - z(cur) >= drop
     start = nodes.select(F.col("id").alias("src"), F.col("id").alias("cur"), F.lit(0.0).alias("d"))
-    done = None
     frontier = start.join(zmap.select(F.col("id").alias("src"), F.col("z").alias("z0")), "src")
     frontier = frontier.join(zmap.select(F.col("id").alias("cur"), F.col("z").alias("zc")), "cur")
     reached = frontier.where(F.col("z0") - F.col("zc") >= drop).select("src", "d")
@@ -173,19 +173,26 @@ def downslope_index(
     active = frontier.where(F.col("z0") - F.col("zc") < drop).select(
         "src", "cur", "d", "z0"
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    # not a graph.expand walk: the frontier (live walks) and the result
+    # (walks that reached the drop) are different row sets
+    def advance(state):
+        done, active = state
         step = (
             active.join(edges, active.cur == edges.a)
             .select("src", F.col("b").alias("cur"), (F.col("d") + F.col("len")).alias("d"), "z0")
         )
-        if step.limit(1).count() == 0:
-            break
+        if _empty(step):
+            return state, True
         step = step.join(zmap.select(F.col("id").alias("cur"), F.col("z").alias("zc")), "cur")
         newly = step.where(F.col("z0") - F.col("zc") >= drop).select("src", "d")
         done = done.unionByName(newly).localCheckpoint(eager=True)
         active = step.where(F.col("z0") - F.col("zc") < drop).select(
             "src", "cur", "d", "z0"
         ).localCheckpoint(eager=True)
+        return (done, active), False
+
+    done, _ = _rounds((done, active), advance, max_rounds, "downslope_index")
     best = done.groupBy("src").agg(F.min("d").alias("dist"))
     return (
         nodes.join(best.withColumnRenamed("src", "id"), "id")

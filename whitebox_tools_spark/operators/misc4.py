@@ -7,7 +7,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats
+from whitebox_tools_spark.operators.graph import checkpoint_nostats, expand
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 
@@ -76,20 +76,15 @@ def cost_pathway(
         )
         .localCheckpoint(eager=True)
     )
-    on = dest_ids.distinct().localCheckpoint(eager=True)
-    jump = succ
-    rounds = max(1, math.ceil(math.log2(max_steps)))
-    prev_n = on.count()
-    for k in range(rounds):
-        stepped = (
-            on.join(jump, "id").select(F.col("nxt").alias("id"))
-        )
-        on = on.unionByName(stepped).distinct().transform(checkpoint_nostats)
-        n = on.count()
-        if n == prev_n:
-            break  # all walks have reached their source self-loops
-        prev_n = n
-        if k < rounds - 1:
+    jump = None
+
+    def step(_frontier, on):
+        # round k steps every visited cell by the 2^k-step jump; empty once
+        # all walks have reached their source self-loops
+        nonlocal jump
+        if jump is None:
+            jump = succ
+        else:
             jx = jump.select(F.col("id").alias("jid"), F.col("nxt").alias("mid"))
             jy = jump.select(F.col("id").alias("mid"), F.col("nxt").alias("jnxt"))
             jump = (
@@ -97,6 +92,13 @@ def cost_pathway(
                 .select(F.col("jid").alias("id"), F.col("jnxt").alias("nxt"))
                 .transform(checkpoint_nostats)
             )
+        stepped = on.join(jump, "id").select(F.col("nxt").alias("id"))
+        return stepped.distinct().join(on, "id", "left_anti")
+
+    on = expand(
+        dest_ids.distinct().localCheckpoint(eager=True), step,
+        max(1, math.ceil(math.log2(max_steps))), "cost_pathway",
+    )
     return cells.join(on, "id", "left_semi").select(
         "row", "col", F.lit(1.0).alias("value")
     )

@@ -7,7 +7,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import size_hint
+from whitebox_tools_spark.operators.graph import expand, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 
@@ -92,15 +92,14 @@ def hillslopes(
     seeds = bedge.select(
         F.col("ua").alias("id"), (F.col("link") * 3 + side).alias("payload")
     )
-    known = seeds.localCheckpoint(eager=True)
-    frontier = known
     # propagate upstream through non-stream cells
     ns_edges = edges.join(
         sid.select(F.col("id").alias("b2")), edges.b == F.col("b2"), "left_anti"
     ).join(u.select(F.col("id").alias("a2")), edges.a == F.col("a2"), "left_semi")
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
-        step = (
+
+    def step(frontier, known):
+        return (
             ns_edges.join(size_hint(frontier, small), ns_edges.b == frontier.id)
             .select(F.col("a").alias("id"), "payload")
             .join(
@@ -109,10 +108,8 @@ def hillslopes(
                 "left_anti",
             )
         )
-        if step.limit(1).count() == 0:
-            break
-        known = known.unionByName(step).localCheckpoint(eager=True)
-        frontier = step.localCheckpoint(eager=True)
+
+    known = expand(seeds.localCheckpoint(eager=True), step, max_rounds, "hillslopes")
     stream_out = sid.select("id", (F.col("link") * 3).alias("payload"))
     allp = known.unionByName(stream_out)
     return nodes.join(allp, "id").select(

@@ -8,7 +8,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats
+from whitebox_tools_spark.operators.graph import checkpoint_nostats, expand
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 SD_A1, SD_B1 = 22695477, 1
@@ -55,20 +55,13 @@ def unnest_basins(
     reach = pset.select(
         F.col("id").alias("src"), F.col("id").alias("cur"), F.lit(0).alias("n")
     ).localCheckpoint(eager=True)
-    jump = succ
-    rounds = max(1, _math.ceil(_math.log2(max(2, max_rounds))))
-    prev_n = reach.count()
-    for k in range(rounds):
-        stepped = (
-            reach.join(jump, reach.cur == jump.id)
-            .select("src", F.col("nxt").alias("cur"), (F.col("n") + F.col("inc")).alias("n"))
-        )
-        reach = reach.unionByName(stepped).distinct().transform(checkpoint_nostats)
-        n_now = reach.count()
-        if n_now == prev_n:
-            break
-        prev_n = n_now
-        if k < rounds - 1:
+    jump = None
+
+    def step(_frontier, reach):
+        nonlocal jump
+        if jump is None:
+            jump = succ
+        else:
             jx = jump.select(F.col("id").alias("jid"), F.col("nxt").alias("mid"), F.col("inc").alias("i1"))
             jy = jump.select(F.col("id").alias("mid"), F.col("nxt").alias("jnxt"), F.col("inc").alias("i2"))
             jump = (
@@ -77,6 +70,14 @@ def unnest_basins(
                         (F.col("i1") + F.col("i2")).alias("inc"))
                 .transform(checkpoint_nostats)
             )
+        stepped = (
+            reach.join(jump, reach.cur == jump.id)
+            .select("src", F.col("nxt").alias("cur"), (F.col("n") + F.col("inc")).alias("n"))
+        )
+        return stepped.distinct().join(reach, ["src", "cur", "n"], "left_anti")
+
+    rounds = max(1, _math.ceil(_math.log2(max(2, max_rounds))))
+    reach = expand(reach, step, rounds, "unnest_basins")
     lvl = reach.groupBy("src").agg(F.max("n").alias("lv"))
     return (
         nodes.join(lvl.withColumnRenamed("src", "id"), "id")

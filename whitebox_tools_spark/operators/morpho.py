@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.focal import focal_apply
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.graph import changed, fixpoint
+from whitebox_tools_spark.operators.gridding import GridConfig
 
 MDX = [1, 1, 1, 0, -1, -1, -1, 0]
 MDY = [-1, 0, 1, 1, 1, 0, -1, -1]
@@ -83,24 +84,16 @@ def line_thinning(
 ) -> DataFrame:
     """LineThinning (image_analysis/line_thin.rs): iterated 4-directional
     hit-and-miss deletion until stable (synchronous engine form)."""
-    cur = raster.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nxt = cur
+
+    def step(cur):
         for a in range(4):
-            nxt = _thin_pass(nxt, cfg, a, tile_size).localCheckpoint(eager=True)
-        changed = (
-            nxt.alias("n")
-            .join(cur.alias("o"), ["row", "col"])
-            .where(F.col("n.value") != F.col("o.value"))
-            .limit(1)
-            .count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("line_thinning", max_rounds)
-    return cur
+            cur = _thin_pass(cur, cfg, a, tile_size).localCheckpoint(eager=True)
+        return cur
+
+    return fixpoint(
+        raster.localCheckpoint(eager=True), step, changed(["row", "col"], "value"),
+        max_rounds, "line_thinning",
+    )
 
 
 def thicken_raster_line(

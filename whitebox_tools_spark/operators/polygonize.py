@@ -129,32 +129,31 @@ def _walk_face(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def polygonize(lines: DataFrame, peel_rounds: int = 32) -> DataFrame:
     """(fid, vi, x, y): canonical vertex rows of every enclosed polygon."""
-    from whitebox_tools_spark.operators.graph import connected_components
+    from whitebox_tools_spark.operators.graph import connected_components, fixpoint
 
-    edges = _pieces(lines).localCheckpoint(eager=True)
-
-    # 2-core peel: drop pieces with an endpoint of degree 1
-    for _ in range(peel_rounds):
+    def peel(edges):
+        """2-core peel: drop pieces with an endpoint of degree 1."""
         ends = edges.select(F.col("ax").alias("x"), F.col("ay").alias("y")).unionAll(
             edges.select(F.col("bx").alias("x"), F.col("by").alias("y"))
         )
         deg = ends.groupBy("x", "y").agg(F.count(F.lit(1)).alias("deg"))
         d1 = deg.where(F.col("deg") <= 1)
-        nxt = (
-            edges.join(
-                d1.select(F.col("x").alias("ax"), F.col("y").alias("ay")),
-                ["ax", "ay"],
-                "left_anti",
-            ).join(
-                d1.select(F.col("x").alias("bx"), F.col("y").alias("by")),
-                ["bx", "by"],
-                "left_anti",
-            )
-        ).localCheckpoint(eager=True)
-        if nxt.count() == edges.count():
-            edges = nxt
-            break
-        edges = nxt
+        return edges.join(
+            d1.select(F.col("x").alias("ax"), F.col("y").alias("ay")),
+            ["ax", "ay"],
+            "left_anti",
+        ).join(
+            d1.select(F.col("x").alias("bx"), F.col("y").alias("by")),
+            ["bx", "by"],
+            "left_anti",
+        )
+
+    def dropped(new, old):
+        return old.join(new, old.columns, "left_anti")
+
+    edges = fixpoint(
+        _pieces(lines).localCheckpoint(eager=True), peel, dropped, peel_rounds, "polygonize"
+    )
 
     # ids are stable: assigned on a materialized (checkpointed) frame
     eid = edges.withColumn("e", F.monotonically_increasing_id())

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.color import opening as opening_op
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.graph import expand
+from whitebox_tools_spark.operators.gridding import GridConfig
 
 RDX = [1, 1, 1, 0, -1, -1, -1, 0]
 RDY = [-1, 0, 1, 1, 1, 0, -1, -1]
@@ -81,21 +82,16 @@ def remove_off_terrain_objects(
     ground = cells.where(F.col("t") <= F.lit(thr[1])).select("id").localCheckpoint(
         eager=True
     )
-    frontier = ground
-    for _ in range(max_rounds):
-        nxt = (
+
+    def step(frontier, ground):
+        return (
             frontier.join(edges, frontier.id == edges.a)
             .select(F.col("b").alias("id"))
             .distinct()
             .join(ground, "id", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.limit(1).count() == 0:
-            break
-        ground = ground.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        _warn_nonconverged("remove_off_terrain_objects", max_rounds)
+
+    ground = expand(ground, step, max_rounds, "remove_off_terrain_objects")
 
     g = cells.join(ground, "id").localCheckpoint(eager=True)
     non_ground = cells.join(ground, "id", "left_anti")

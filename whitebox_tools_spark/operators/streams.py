@@ -22,7 +22,12 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import connected_components
+from whitebox_tools_spark.operators.graph import (
+    changed,
+    connected_components,
+    fixpoint,
+    size_hint,
+)
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
 
@@ -55,32 +60,16 @@ def stream_graph(streams: DataFrame, dirs: DataFrame, cfg: GridConfig):
     return nodes, edges
 
 
-def _fixpoint(nodes, update, max_rounds: int = 100, batch: int = 2):
-    """Iterate val(id) <- update(prev) until unchanged. ``update`` takes a
-    DataFrame (id, val) and returns the next (id, val). ``batch`` update
-    rounds run lazily between each checkpoint + convergence check —
-    halves the driver-side action count (a converged extra round is
-    idempotent, so correctness is unaffected)."""
-    from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
-
+def _fixpoint(update, max_rounds: int, name: str):
+    """Iterate val(id) <- update(prev) until unchanged (graph.fixpoint).
+    ``update`` takes a DataFrame (id, val) and returns the next (id, val);
+    ``update(None)`` is the initial frame."""
     cur = update(None).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = update(size_hint(nxt, small))
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n")
-            .join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val"))
-            .limit(1)
-            .count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return cur
+    return fixpoint(
+        cur, lambda prev: update(size_hint(prev, small)), changed("id", "val"),
+        max_rounds, name,
+    )
 
 
 def _as_raster(nodes, vals) -> DataFrame:
@@ -109,7 +98,7 @@ def shreve_magnitude(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> D
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    return _as_raster(nodes, _fixpoint(update, max_rounds, "shreve_magnitude"))
 
 
 def length_of_upstream_channels(
@@ -136,7 +125,7 @@ def length_of_upstream_channels(
             .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
         )
 
-    upstream = _fixpoint(nodes, update, max_rounds)
+    upstream = _fixpoint(update, max_rounds, "length_of_upstream_channels")
     diag = math.sqrt(cfg.res_x * cfg.res_x + cfg.res_y * cfg.res_y)
     lens = [diag, cfg.res_x, diag, cfg.res_y, diag, cfg.res_x, diag, cfg.res_y]
     ln = F.array(*[F.lit(v) for v in lens])
@@ -173,7 +162,7 @@ def farthest_channel_head(
             .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    return _as_raster(nodes, _fixpoint(update, max_rounds, "farthest_channel_head"))
 
 
 def distance_to_outlet(
@@ -195,7 +184,7 @@ def distance_to_outlet(
             .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    return _as_raster(nodes, _fixpoint(update, max_rounds, "distance_to_outlet"))
 
 
 def topological_stream_order(
@@ -225,7 +214,7 @@ def topological_stream_order(
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    return _as_raster(nodes, _fixpoint(update, max_rounds, "topological_stream_order"))
 
 
 def _links(nodes, edges):

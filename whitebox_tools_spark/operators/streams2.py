@@ -17,7 +17,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.graph import changed, expand, fixpoint, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.streams import stream_graph
 
@@ -108,30 +108,24 @@ def stream_link_slope(streams, dirs, z, cfg: GridConfig) -> DataFrame:
     return _as_raster(nodes, vals)
 
 
-def _fh(nodes, edges, max_rounds=100):
+def _fh(nodes, edges, max_rounds, name):
     """Farthest-head distance per cell (0 at heads) — main-stem criterion."""
     cur = nodes.select("id", F.lit(0.0).alias("fh")).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(cur):
         up = (
             edges.join(size_hint(cur, small), edges.a == cur.id)
             .groupBy("b")
             .agg(F.max(F.col("fh") + F.col("len")).alias("s"))
         )
-        nxt = (
+        return (
             nodes.select("id")
             .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
             .select("id", F.coalesce("s", F.lit(0.0)).alias("fh"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.fh") != F.col("o.fh")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return cur
+
+    return fixpoint(cur, step, changed("id", "fh"), max_rounds, name)
 
 
 def _main_flags(nodes, edges, criterion):
@@ -148,7 +142,7 @@ def hack_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataFra
     the longest-upstream inflow (farthest head-path, ties min cell id)
     continues the parent's order, other inflows get parent + 1."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-    fh = _fh(nodes, edges, max_rounds)
+    fh = _fh(nodes, edges, max_rounds, "hack_order")
     ej = edges.join(fh.withColumnRenamed("id", "a"), "a")
     flags = _main_flags(nodes, ej, F.col("fh") + F.col("len")).localCheckpoint(eager=True)
     inflow = edges.groupBy("b").agg(F.count(F.lit(1)).alias("n_in"))
@@ -162,23 +156,17 @@ def hack_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataFra
     )
     cur = nodes.select("id", F.lit(1).alias("val")).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+
+    def down(cur):
         dn = step.join(size_hint(cur, small), step.b == cur.id).select(
             F.col("a").alias("id"), (F.col("val") + F.col("inc")).alias("s")
         )
-        nxt = (
+        return (
             nodes.select("id").join(size_hint(dn, small), "id", "left")
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return _as_raster(nodes, cur)
+
+    return _as_raster(nodes, fixpoint(cur, down, changed("id", "val"), max_rounds, "hack_order"))
 
 
 def horton_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataFrame:
@@ -206,25 +194,20 @@ def horton_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataF
     )
     cur = strah.select("id", F.col("ord").alias("val")).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+
+    def down(cur):
         dn = (
             step.where(F.col("inherit"))
             .join(size_hint(cur, small), step.b == cur.id)
             .select(F.col("a").alias("id"), F.col("val").alias("s"))
         )
-        nxt = (
-            strah.join(size_hint(dn, small), "id", "left")
-            .select("id", F.coalesce("s", F.col("ord")).alias("val"))
-            .transform(checkpoint_nostats)
+        return strah.join(size_hint(dn, small), "id", "left").select(
+            "id", F.coalesce("s", F.col("ord")).alias("val")
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return _as_raster(nodes, cur)
+
+    return _as_raster(
+        nodes, fixpoint(cur, down, changed("id", "val"), max_rounds, "horton_order")
+    )
 
 
 def tributary_id(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataFrame:
@@ -232,31 +215,26 @@ def tributary_id(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataF
     head downstream while it remains the main (longest-upstream) inflow;
     ids are the dense rank of the tributary's head cell id."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-    fh = _fh(nodes, edges, max_rounds)
+    fh = _fh(nodes, edges, max_rounds, "tributary_id")
     ej = edges.join(fh.withColumnRenamed("id", "a"), "a")
     flags = _main_flags(nodes, ej, F.col("fh") + F.col("len")).localCheckpoint(eager=True)
     # propagate the head id downstream along main edges
     cur = nodes.select("id", F.col("id").alias("val")).localCheckpoint(eager=True)
     small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(cur):
         up = (
             flags.where(F.col("is_main"))
             .join(size_hint(cur, small), F.col("a") == cur.id)
             .select(F.col("b").alias("id"), F.col("val").alias("s"))
         )
-        nxt = (
+        return (
             nodes.select("id")
             .join(size_hint(up, small), "id", "left")
             .select("id", F.coalesce("s", F.col("id")).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = fixpoint(cur, step, changed("id", "val"), max_rounds, "tributary_id")
     ranked = cur.select("val").distinct().withColumn(
         "tid", F.row_number().over(Window.orderBy("val"))
     )
@@ -269,15 +247,14 @@ def find_main_stem(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> Dat
     each outlet through successive main (longest-upstream) inflows,
     0.0 on other stream cells."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-    fh = _fh(nodes, edges, max_rounds)
+    fh = _fh(nodes, edges, max_rounds, "find_main_stem")
     ej = edges.join(fh.withColumnRenamed("id", "a"), "a")
     flags = _main_flags(nodes, ej, F.col("fh") + F.col("len")).localCheckpoint(eager=True)
     outlets = nodes.join(edges.select(F.col("a").alias("id")), "id", "left_anti").select("id")
-    on = outlets.localCheckpoint(eager=True)
-    frontier = on
     small = nodes.count() <= 2_000_000
-    for _ in range(max_rounds):
-        step = (
+
+    def step(frontier, on):
+        return (
             flags.where(F.col("is_main"))
             .join(size_hint(frontier, small), flags.b == frontier.id)
             .select(F.col("a").alias("id"))
@@ -287,10 +264,8 @@ def find_main_stem(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> Dat
                 "left_anti",
             )
         )
-        if step.limit(1).count() == 0:
-            break
-        on = on.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    on = expand(outlets.localCheckpoint(eager=True), step, max_rounds, "find_main_stem")
     vals = nodes.select("id").join(
         on.select(F.col("id").alias("m")), nodes.id == F.col("m"), "left"
     ).select("id", F.when(F.col("m").isNotNull(), 1.0).otherwise(0.0).alias("val"))

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.focal import focal_apply, horn_fxfy
+from whitebox_tools_spark.operators.graph import changed, fixpoint
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
 from whitebox_tools_spark.operators.hydro2 import d8_graph
@@ -217,18 +218,14 @@ def elev_above_pit(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> 
         .select("id", F.coalesce("b", F.col("id")).alias("nxt"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(32):
-        hop = nxt.alias("x").join(
+
+    def hop(nxt):
+        return nxt.alias("x").join(
             nxt.alias("y").select(F.col("y.id").alias("nid"), F.col("y.nxt").alias("n2")),
             F.col("x.nxt") == F.col("nid"),
         ).select(F.col("x.id").alias("id"), F.col("n2").alias("nxt"))
-        changed = (
-            hop.alias("n").join(nxt.alias("o"), "id")
-            .where(F.col("n.nxt") != F.col("o.nxt")).limit(1).count()
-        )
-        nxt = hop.localCheckpoint(eager=True)
-        if changed == 0:
-            break
+
+    nxt = fixpoint(nxt, hop, changed("id", "nxt"), 32, "elev_above_pit")
     z = raster.select(
         (F.col("row") * cfg.cols + F.col("col")).alias("id"), F.col("value").alias("z")
     )
@@ -337,7 +334,8 @@ def average_upslope_flowpath_length(
     cur = nodes.select(
         "id", F.lit(0.0).alias("nsum"), F.lit(1.0).alias("cnt")
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def step(cur):
         up = (
             edges.join(cur, edges.a == cur.id)
             .groupBy("b")
@@ -346,7 +344,7 @@ def average_upslope_flowpath_length(
                 F.sum("cnt").alias("c"),
             )
         )
-        nxt = (
+        return (
             nodes.select("id")
             .join(up.withColumnRenamed("b", "id"), "id", "left")
             .select(
@@ -354,18 +352,11 @@ def average_upslope_flowpath_length(
                 F.coalesce("s", F.lit(0.0)).alias("nsum"),
                 (F.lit(1.0) + F.coalesce("c", F.lit(0.0))).alias("cnt"),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(
-                (F.col("n.nsum") != F.col("o.nsum")) | (F.col("n.cnt") != F.col("o.cnt"))
-            )
-            .limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = fixpoint(
+        cur, step, changed("id", "nsum", "cnt"), max_rounds, "average_upslope_flowpath_length"
+    )
     return nodes.join(cur, "id").select(
         "row",
         "col",

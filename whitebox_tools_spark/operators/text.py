@@ -1008,6 +1008,8 @@ def bm25_scores(
     convention for transcendental lanes)."""
     if not terms:
         raise ValueError("bm25_scores needs a non-empty term list")
+    if len(set(terms)) != len(terms):
+        raise ValueError(f"bm25_scores terms must be distinct, got {list(terms)}")
     base = docs.select(F.col(record), tokens(F.col(text)).alias("_toks"))
 
     def _tf(term: str) -> Column:
@@ -1359,7 +1361,6 @@ def bpe_encode(
         .distinct()
     )
     syms = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-    cur = F.col("_syms")
     lens = words.withColumn("_syms", syms)
     empty = F.expr("cast(array() as array<string>)")
     for _rank, left, right, _cnt in sorted(merges):
