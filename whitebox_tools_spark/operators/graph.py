@@ -20,11 +20,15 @@ through the one round loop here, via two entry points:
 
 A loop that spends its ``max_rounds`` without converging warns
 ``not converged`` (RuntimeWarning); no result is silently partial.
+Every finished loop appends ``(name, rounds, converged)`` to ``ROUNDS``
+(the most recent ``ROUNDS.maxlen`` loops), so a run can report its
+fixpoint round counts without threading them through return values.
 """
 
 from __future__ import annotations
 
 import warnings
+from collections import deque
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -108,14 +112,21 @@ def _empty(df: DataFrame) -> bool:
     return df.limit(1).count() == 0
 
 
+# (name, rounds, converged) per finished loop; rounds = steps run
+ROUNDS: deque = deque(maxlen=4096)
+
+
 def _rounds(state, advance, max_rounds: int, name: str, stride: int = 1):
     """The one bounded round loop: ``advance(state) -> (state, done)``
     runs once per ``stride`` rounds of the ``max_rounds`` budget. Spending
     the budget without ``done`` warns (see ``_warn_nonconverged``)."""
-    for _ in range(max(1, -(-max_rounds // stride))):
+    checks = max(1, -(-max_rounds // stride))
+    for i in range(checks):
         state, done = advance(state)
         if done:
+            ROUNDS.append((name, (i + 1) * stride, True))
             return state
+    ROUNDS.append((name, checks * stride, False))
     _warn_nonconverged(name, max_rounds)
     return state
 

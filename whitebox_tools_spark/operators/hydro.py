@@ -24,26 +24,35 @@ Parity contracts:
 - D8FlowAccumulation (hydro_analysis/d8_flow_accum.rs:330-430): every
   cell starts at 1; counts propagate topologically downstream. Flow is
   strictly height-decreasing => DAG; accum(c) = #cells whose flow path
-  passes through c (incl. itself). Spark: frontier iteration
-  acc_{t+1} = 1 + sum(upstream acc_t), converging in longest-flow-path
-  rounds (bounded, localCheckpoint'ed); at cluster scale this is the
-  standard aggregate-messages loop.
+  passes through c (incl. itself). Spark, tiled (Barnes 2017, "Parallel
+  non-divergent flow accumulation for trillion cell DEMs"): one halo
+  shuffle, then each tile walks its own cells in descending elevation
+  (a topological order) for the in-tile accumulation and the exit cell
+  through which each path leaves the tile. Only the small forest of
+  exit cells is solved globally (a fixpoint whose rounds count tile
+  crossings, not path cells); each tile then re-accumulates with
+  weights 1 + inflow from its neighbours. Watershed reuses the same walk
+  (see ``watershed``).
 """
 
 from __future__ import annotations
 
 import math
+import re
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whitebox_tools_spark.operators.focal import _TILE_SCHEMA, with_halo
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.graph import (
     changed,
+    checkpoint_nostats,
     connected_components,
     fixpoint,
     size_hint,
@@ -269,53 +278,217 @@ def d8_pointer(
     return focal_apply(raster, cfg, _d8_dir_stencil(cfg, esri_style), 1, tile_size)
 
 
+# ------------------------------------------------------ tiled D8 walker
+
+_WALK_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("tile_row", "tile_col", "row", "col", "id")]
+    + [T.StructField(c, T.LongType()) for c in ("rank", "down", "out")]
+    + [T.StructField("acc", T.DoubleType())]
+    + [T.StructField(c, T.LongType()) for c in ("exit", "label", "ptr")]
+)
+
+_DUPLICATE = re.compile(r"duplicate cell \(-?\d+, -?\d+\) in the (raster|pour points)")
+
+
+def _reject_duplicates(rows: np.ndarray, cols: np.ndarray, what: str) -> None:
+    """ValueError naming the first (row-major) repeated (row, col)."""
+    o = np.lexsort((cols, rows))
+    r, c = rows[o], cols[o]
+    rep = (r[1:] == r[:-1]) & (c[1:] == c[:-1])
+    if rep.any():
+        k = int(np.argmax(rep))
+        raise ValueError(f"duplicate cell ({r[k]}, {c[k]}) in the {what}")
+
+
+def _accumulate(down: np.ndarray, weight: np.ndarray) -> np.ndarray:
+    """Weighted in-tile accumulation; cells are indexed by topological
+    rank, so every upstream cell is visited before its ``down`` cell."""
+    acc = weight.tolist()
+    for i, j in enumerate(down.tolist()):
+        if j >= 0:
+            acc[j] += acc[i]
+    return np.asarray(acc, dtype=np.float64)
+
+
+def _d8_walk(
+    raster: DataFrame, cfg: GridConfig, tile_size: int, name: str,
+    pour_points: DataFrame | None = None,
+) -> DataFrame:
+    """One tile-local D8 walk (Barnes 2017): one ``with_halo(t, 1)``
+    shuffle, then per tile ``_d8_dir_stencil(as_index=True)`` on the
+    padded block and a walk of the tile's own valid cells in descending
+    elevation (a topological order: every D8 step strictly descends).
+
+    One row per own valid cell, checkpointed: ``rank`` (topological
+    position in the tile) and ``down`` (rank of the in-tile next cell);
+    ``out``, the out-of-tile next cell id when the path leaves the tile
+    at this cell; ``acc``, the in-tile accumulation; ``exit``, the cell
+    through which the path leaves the tile; ``label``, the first pour
+    cell on the in-tile path, else ``ptr``, where the path leaves the
+    tile. Cell ids are ``row * cols + col``; -1 means none.
+
+    A repeated (row, col) in the raster or in ``pour_points`` raises
+    ValueError from the tile that owns it (no extra Spark job)."""
+    t, n_cols = tile_size, cfg.cols
+    cells = raster.select(
+        F.col("row").cast("long"), F.col("col").cast("long"), F.col("value").cast("double")
+    )
+    rows = with_halo(cells, t, 1).withColumn("pour", F.lit(False))
+    if pour_points is not None:
+        rows = rows.unionByName(
+            pour_points.where(F.col("value").isNotNull()).select(
+                F.col("row").cast("long"),
+                F.col("col").cast("long"),
+                F.lit(None).cast("double").alias("value"),
+                (F.col("row") / t).cast("long").alias("tile_row"),
+                (F.col("col") / t).cast("long").alias("tile_col"),
+                F.lit(False).alias("is_halo"),
+                F.lit(True).alias("pour"),
+            )
+        )
+    stencil = _d8_dir_stencil(cfg, as_index=True)
+    dy_arr, dx_arr = np.array(D8_DY), np.array(D8_DX)
+
+    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
+        tile_r, tile_c = int(pdf["tile_row"].iloc[0]), int(pdf["tile_col"].iloc[0])
+        base_r, base_c = tile_r * t - 1, tile_c * t - 1
+        r = pdf["row"].to_numpy(dtype=np.int64)
+        c = pdf["col"].to_numpy(dtype=np.int64)
+        is_pour = pdf["pour"].to_numpy(dtype=bool)
+        own = ~pdf["is_halo"].to_numpy(dtype=bool) & ~is_pour
+        _reject_duplicates(r[own], c[own], "raster")
+        _reject_duplicates(r[is_pour], c[is_pour], "pour points")
+
+        dem = ~is_pour
+        block = np.full((t + 2, t + 2), np.nan, dtype=np.float64)
+        block[r[dem] - base_r, c[dem] - base_c] = pdf["value"].to_numpy(dtype=np.float64)[dem]
+        valid = ~np.isnan(block)
+        dirs = stencil(block, valid, base_r, base_c, cfg)
+
+        lr, lc = r[own] - base_r, c[own] - base_c
+        keep = valid[lr, lc]
+        lr, lc = lr[keep], lc[keep]
+        order = np.argsort(-block[lr, lc], kind="stable")
+        lr, lc = lr[order], lc[order]  # index == topological rank
+        n = len(lr)
+        gid = (lr + base_r) * n_cols + (lc + base_c)
+        rank = np.full(block.shape, -1, dtype=np.int64)
+        rank[lr, lc] = np.arange(n)
+
+        d = dirs[lr, lc].astype(np.int64)
+        flows = d >= 0
+        nr = lr + dy_arr[np.clip(d, 0, 7)]
+        nc = lc + dx_arr[np.clip(d, 0, 7)]
+        down = np.where(flows, rank[nr, nc], -1)
+        out = np.where(flows & (down < 0), (nr + base_r) * n_cols + (nc + base_c), -1)
+
+        pr, pc = r[is_pour] - base_r, c[is_pour] - base_c
+        inside = (pr >= 1) & (pr <= t) & (pc >= 1) & (pc <= t)
+        pour_rank = rank[pr[inside], pc[inside]]
+        is_p = np.zeros(n, dtype=bool)
+        is_p[pour_rank[pour_rank >= 0]] = True
+
+        # downstream first: a cell inherits exit / label / ptr of its next cell
+        ex = np.where(out >= 0, gid, -1).tolist()
+        label = np.where(is_p, gid, -1).tolist()
+        ptr = np.where(is_p, -1, out).tolist()
+        dn = down.tolist()
+        for i in range(n - 1, -1, -1):
+            j = dn[i]
+            if j >= 0:
+                ex[i] = ex[j]
+                if label[i] < 0:
+                    label[i], ptr[i] = label[j], ptr[j]
+        return pd.DataFrame(
+            {
+                "tile_row": np.full(n, tile_r, dtype=np.int64),
+                "tile_col": np.full(n, tile_c, dtype=np.int64),
+                "row": lr + base_r,
+                "col": lc + base_c,
+                "id": gid,
+                "rank": np.arange(n, dtype=np.int64),
+                "down": down,
+                "out": out,
+                "acc": _accumulate(down, np.ones(n)),
+                "exit": np.asarray(ex, dtype=np.int64),
+                "label": np.asarray(label, dtype=np.int64),
+                "ptr": np.asarray(ptr, dtype=np.int64),
+            }
+        )
+
+    walked = rows.groupBy("tile_row", "tile_col").applyInPandas(walk, schema=_WALK_SCHEMA)
+    try:
+        return checkpoint_nostats(walked)
+    except PythonException as e:  # the tile's ValueError, as Spark reports it
+        dup = _DUPLICATE.search(str(e))
+        if dup is None:
+            raise
+        raise ValueError(f"{name}: {dup.group(0)}") from None
+
+
+def _one_tile(cfg: GridConfig, tile_size: int) -> bool:
+    """The whole grid is tile (0, 0): no path can leave it."""
+    return cfg.rows <= tile_size and cfg.cols <= tile_size
+
+
 def d8_flow_accumulation(
     raster: DataFrame, cfg: GridConfig, tile_size: int = 128, max_rounds: int = 200
 ) -> DataFrame:
     """acc(c) = #cells whose D8 flow path passes through c (out_type=
-    'cells', the reference default). Frontier iteration over the flow DAG."""
-    from whitebox_tools_spark.operators.focal import focal_apply
+    'cells', the reference default), from one tile-local walk
+    (``_d8_walk``) plus a fixpoint over the exit-cell forest only:
+    out(x) = local_acc(x) + sum of out(y) over exit cells y whose target's
+    in-tile path leaves through x. Each entry cell then takes
+    inflow = sum of out(x) over the exit cells x pointing at it, and each
+    tile re-accumulates with weights 1 + inflow. ``max_rounds`` bounds the
+    exit-cell loop, whose rounds count tile crossings along a flow path
+    (not cells); a grid of one tile skips it."""
+    walked = _d8_walk(raster, cfg, tile_size, "d8_flow_accumulation")
+    if _one_tile(cfg, tile_size):
+        return walked.select("row", "col", F.col("acc").alias("value"))
 
-    dirs = focal_apply(
-        raster, cfg, _d8_dir_stencil(cfg, as_index=True), 1, tile_size
-    ).select("row", "col", F.col("value").cast("int").alias("dir"))
-    dirs = dirs.localCheckpoint(eager=True)
-
-    dx = F.array(*[F.lit(v) for v in D8_DX])
-    dy = F.array(*[F.lit(v) for v in D8_DY])
-    # the packed target id needs no bounds check HERE because dirs comes
-    # from _d8_dir_stencil above, which can only select an existing
-    # in-grid neighbor; a caller-supplied dirs raster must be bounds-
-    # checked (see strahler_order in operators/cluster.py)
-    down = dirs.where(F.col("dir") >= 0).select(
-        _cell_id(cfg).alias("a"),
-        (
-            (F.col("row") + F.element_at(dy, F.col("dir") + 1)) * cfg.cols
-            + (F.col("col") + F.element_at(dx, F.col("dir") + 1))
-        ).alias("b"),
-    )
-    down = down.localCheckpoint(eager=True)
-
-    nodes = dirs.select("row", "col", _cell_id(cfg))
     small = cfg.rows * cfg.cols <= 2_000_000
+    exits = walked.where(F.col("out") >= 0).select(
+        "id", F.col("acc").alias("local"), F.col("out").alias("tgt")
+    )
+    edges = checkpoint_nostats(
+        exits.join(walked.select(F.col("id").alias("tgt"), F.col("exit").alias("b")), "tgt")
+        .where(F.col("b") >= 0)
+        .select(F.col("id").alias("a"), "b")
+    )
 
-    def _step(acc):
+    def _step(out):
         contrib = (
-            down.join(size_hint(acc, small), down.a == acc.id)
+            edges.join(size_hint(out, small), edges.a == out.id)
             .groupBy("b")
-            .agg(F.sum("acc").alias("inflow"))
+            .agg(F.sum("acc").alias("up"))
         )
-        return (
-            nodes.select("id")
-            .join(size_hint(contrib, small), nodes.id == contrib.b, "left")
-            .select("id", (F.lit(1.0) + F.coalesce(F.col("inflow"), F.lit(0.0))).alias("acc"))
+        return exits.join(size_hint(contrib, small), exits.id == contrib.b, "left").select(
+            "id", (F.col("local") + F.coalesce(F.col("up"), F.lit(0.0))).alias("acc")
         )
 
-    acc = fixpoint(
-        nodes.select("id", F.lit(1.0).alias("acc")), _step, changed("id", "acc"),
+    out = fixpoint(
+        exits.select("id", F.col("local").alias("acc")), _step, changed("id", "acc"),
         max_rounds, "d8_flow_accumulation",
     )
-    return nodes.join(acc, "id").select("row", "col", F.col("acc").alias("value"))
+    inflow = (
+        exits.join(out, "id").groupBy(F.col("tgt").alias("id")).agg(F.sum("acc").alias("inflow"))
+    )
+    weighted = walked.join(size_hint(inflow, small), "id", "left").select(
+        "tile_row", "tile_col", "row", "col", "rank", "down",
+        (F.lit(1.0) + F.coalesce(F.col("inflow"), F.lit(0.0))).alias("w"),
+    )
+
+    def reaccumulate(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("rank")  # ranks are 0..n-1 per tile
+        acc = _accumulate(pdf["down"].to_numpy(), pdf["w"].to_numpy(dtype=np.float64))
+        return pd.DataFrame(
+            {"row": pdf["row"].to_numpy(), "col": pdf["col"].to_numpy(), "value": acc}
+        )
+
+    return weighted.groupBy("tile_row", "tile_col").applyInPandas(
+        reaccumulate, schema=_TILE_SCHEMA
+    )
 
 
 # --------------------------------------------------------------- watershed
@@ -330,43 +503,20 @@ def watershed(
     cells keep their own id; cells whose walk ends in a pit with no pour
     point stay NoData.
 
-    ``pour_points``: (row, col, value=id). Distributed via pointer
-    doubling over the flow function — label(c) resolves in O(log path)
-    rounds; each round is two hash joins on cell ids (localCheckpoint'ed).
-    """
-    from whitebox_tools_spark.operators.focal import focal_apply
-
-    dirs = focal_apply(
-        raster, cfg, _d8_dir_stencil(cfg, as_index=True), 1, tile_size
-    ).select("row", "col", F.col("value").cast("int").alias("dir"))
-
-    dx = F.array(*[F.lit(v) for v in D8_DX])
-    dy = F.array(*[F.lit(v) for v in D8_DY])
-    nodes = dirs.select(
+    ``pour_points``: (row, col, value=id); the output ``value`` keeps the
+    type of the pour ``value``. The tile-local walk (``_d8_walk``) labels
+    every cell whose in-tile path meets a pour cell and points the rest
+    at the cell where their path leaves the tile; pointer doubling over
+    those pointers then resolves label(c) in O(log tile crossings)
+    rounds, each two hash joins on cell ids (checkpointed). A grid of one
+    tile needs no rounds."""
+    walked = _d8_walk(raster, cfg, tile_size, "watershed", pour_points)
+    state = walked.select(
         "row",
         "col",
-        _cell_id(cfg),
-        F.when(
-            F.col("dir") >= 0,
-            (F.col("row") + F.element_at(dy, F.col("dir") + 1)) * cfg.cols
-            + (F.col("col") + F.element_at(dx, F.col("dir") + 1)),
-        ).alias("nxt"),
-    )
-    pour = pour_points.select(
-        (F.col("row") * cfg.cols + F.col("col")).alias("id"),
-        F.col("value").alias("pour_id"),
-    )
-    # pour cells are terminal: their own label, no onward pointer needed
-    state = (
-        nodes.join(pour, "id", "left")
-        .select(
-            "row",
-            "col",
-            "id",
-            F.col("pour_id").alias("label"),
-            F.when(F.col("pour_id").isNull(), F.col("nxt")).alias("ptr"),
-        )
-        .localCheckpoint(eager=True)
+        "id",
+        F.when(F.col("label") >= 0, F.col("label")).alias("label"),
+        F.when(F.col("ptr") >= 0, F.col("ptr")).alias("ptr"),
     )
     small = cfg.rows * cfg.cols <= 2_000_000
 
@@ -392,7 +542,15 @@ def watershed(
     def _unresolved(new, old):
         return new.where(F.col("label").isNull() & F.col("ptr").isNotNull())
 
-    state = fixpoint(state, _jump, _unresolved, max_rounds, "watershed")
-    return state.where(F.col("label").isNotNull()).select(
-        "row", "col", F.col("label").alias("value")
+    if not _one_tile(cfg, tile_size):
+        state = fixpoint(state, _jump, _unresolved, max_rounds, "watershed")
+    in_grid = (
+        (F.col("row") >= 0) & (F.col("row") < cfg.rows)
+        & (F.col("col") >= 0) & (F.col("col") < cfg.cols)
+    )
+    pour = pour_points.where(in_grid & F.col("value").isNotNull()).select(
+        (F.col("row") * cfg.cols + F.col("col")).alias("label"), "value"
+    )
+    return state.where(F.col("label").isNotNull()).join(pour, "label").select(
+        "row", "col", "value"
     )

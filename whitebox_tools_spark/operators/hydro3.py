@@ -141,11 +141,13 @@ def flow_accumulation_full_workflow(
     accum_rounds: int = 100, tile_size: int = 128,
 ) -> DataFrame:
     """FlowAccumulationFullWorkflow (flow_accumulation_full_workflow.rs):
-    fill depressions, then D8 accumulation on the filled surface."""
+    fill depressions, then D8 accumulation on the filled surface.
+    ``accum_rounds`` bounds the accumulation's exit-cell loop, whose
+    rounds count tile crossings along a flow path."""
     from whitebox_tools_spark.operators.hydro import d8_flow_accumulation
     from whitebox_tools_spark.operators.hydro2 import fill_depressions
 
     filled = fill_depressions(raster, cfg, max_rounds=fill_rounds).localCheckpoint(
         eager=True
     )
-    return d8_flow_accumulation(filled, cfg, tile_size=tile_size)
+    return d8_flow_accumulation(filled, cfg, tile_size=tile_size, max_rounds=accum_rounds)
