@@ -5,6 +5,10 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>, "docs_per_sec": ...}
 
+The headline set is ``api.HEADLINE``, the union of each catalog module's
+``HEADLINE`` marks: one representative per operator family plus the
+historically slow queries. ``--queries all`` runs the full catalog.
+
 --scaling additionally runs the flagship pipeline at two parallelism
 levels (N and 4N cores, default 8 vs 32) on the same input and reports
 throughput at both plus efficiency = (T_N / T_4N) / 4 — the sandbox
@@ -62,55 +66,6 @@ def _time_flagship(
     return times[0] if agg == "min" else times[len(times) // 2]
 
 
-# Headline subset: one representative per operator family plus every
-# round-1 slow query (so per-round BENCH files show the fixes), sized so
-# the final JSON line stays well under the driver's 2000-char tail
-# capture. `--queries all` still runs the full 248-query catalog.
-HEADLINE = [
-    # flagship core: tiling / PIP / neighbour joins / gridding
-    "tile_assign", "clip_semi", "tag_polygon", "radius_join", "knn_join",
-    "idw_grid", "block_max",
-    # raster <-> vector + focal/terrain/zonal
-    "points_raster_last", "raster_to_points", "extract_values",
-    "slope", "mean_filter", "hillshade", "zonal_stats", "hex_bin",
-    # hydrology / streams (iterative families)
-    "d8_flow_accum", "fill_depressions", "basins", "watershed",
-    "strahler_order", "stream_link_id", "dinf_flow_accum",
-    # round-1 slow set (theta-joins, collects) — regression watch
-    "polygon_overlay", "dissolve", "split_with_lines", "line_intersections",
-    "burn_streams_at_roads", "viewshed", "euclidean_distance",
-    "narrowness_index", "lidar_segmentation_filter", "cost_pathway",
-    # LLM-pipeline ops
-    "exact_dedup", "minhash_pairs", "simhash_pairs", "token_stats",
-    "quality", "lang_id", "ann_topk", "lsh_topk", "media_meta",
-    # round-3 additions: IVF ANN scale path, native codecs, span invariant
-    "ivf_topk", "geotiff_roundtrip", "las_roundtrip", "span_invariant",
-    # round-4 additions: LAS 1.4 extended records, BigTIFF, RGB bridge,
-    # real (BMP) media decode lane
-    "las14_roundtrip", "bigtiff_roundtrip", "rgb_roundtrip",
-    "media_decode_real", "media_decode_wav", "viewshed_sweep",
-    # structured-streaming lane (AvailableNow replay of the fixtures)
-    "streaming_window_counts", "streaming_session_peaks",
-    # late round-4: exact n-gram Jaccard dedup (posting-list join)
-    "ngram_jaccard",
-    # round-5 additions: PNG + JPEG real decode lanes, zipped-LAS
-    # container, streaming exact dedup (stateful min-id)
-    "media_decode_png", "media_decode_jpeg", "las_zip_roundtrip",
-    "streaming_exact_dedup", "media_decode_gif", "media_decode_avi",
-    "jpeg_in_tiff_roundtrip", "cog_overviews_roundtrip",
-    "geojson_roundtrip", "geojsonl_scan", "audio_stats", "image_stats",
-    "video_frame_sample", "pii_scrub", "dedup_clusters",
-    "geojsonl_points_scan", "streaming_media_stats", "pack_sequences", "split_corpus", "build_vocab",
-    "repetition_signals", "decontaminate",
-    "quantize_embeddings",
-    # round-5 closing session: BM25/TF-IDF topicality scoring,
-    # substring-level exact dedup (Lee et al. spans), BPE merge
-    # training, product-quantization ANN (compressed-domain ADC)
-    "bm25_score", "dup_spans", "bpe_train", "pq_topk", "bigram_lm",
-    "ivfpq_topk",
-]
-
-
 def _loadavg() -> list[float]:
     """Host 1/5/15-min load — recorded into the JSON so a reader can
     adjudicate noisy-VM windows without rerunning (VERDICT r3 item 9)."""
@@ -139,7 +94,7 @@ def _run_suite(
     elif queries is not None:
         names = queries
     else:
-        names = [q for q in HEADLINE if q in api.QUERIES]
+        names = list(api.HEADLINE)
         print(
             f"bench: HEADLINE subset, {len(names)} of {len(api.QUERIES)} "
             "catalog queries (pass --queries all for the full catalog)",

@@ -6,7 +6,9 @@ thread pool over one Spark session (Spark schedules concurrent jobs
 fine; each worker gets its own DuckDB connection).
 
 Usage: python scripts/verify_contract.py [sf_dir] [threads] [name_filter]
-Prints one line per query and a final "BAD: [...]" summary.
+Prints one line per query, a "BAD: [...]" summary, and a final
+"NOT-CONVERGED: [...]" line naming every fixpoint loop (``graph.ROUNDS``)
+that ran out of rounds.
 """
 
 from __future__ import annotations
@@ -22,6 +24,9 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as m  # noqa: E402
 from pyspark.sql import SparkSession
+
+from whitebox_tools_spark.api import ROWS_ONLY  # noqa: E402
+from whitebox_tools_spark.operators import graph  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 THREADS = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -89,15 +94,14 @@ def main():
                 bad.append((name, msg))
             print(f"{name}: {msg} ({dt:.1f}s)", flush=True)
     rows_only = [n for n, msg in bad if "rows-only" in msg]
-    # the documented oracle-less rows (genuinely iterative ops). A name
-    # missing from ORACLE_SQL that is NOT in this set is a forgotten
-    # oracle registration — a real failure, not an exemption.
-    ROWS_ONLY_OK = {"bpe_train"}
-    unexpected = [n for n in rows_only if n not in ROWS_ONLY_OK]
+    # a name missing from ORACLE_SQL without a declared ROWS_ONLY reason
+    # is a forgotten oracle registration — a real failure, not an exemption
+    unexpected = [n for n in rows_only if n not in ROWS_ONLY]
     if rows_only:
         print("ROWS-ONLY:", rows_only, flush=True)
     failures = [n for n, msg in bad if "rows-only" not in msg] + unexpected
     print("BAD:", failures, flush=True)
+    print("NOT-CONVERGED:", [n for n, _, done in graph.ROUNDS if not done], flush=True)
     return 0 if not failures else 1
 
 

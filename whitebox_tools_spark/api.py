@@ -1,414 +1,85 @@
-"""Driver-facing query catalog: Spark queries + their DuckDB oracle SQL.
+"""Driver-facing query catalog, discovered from the ``catalog_*`` modules.
 
-Every implemented operator family gets a (queries, oracle_sql) pair over
-the shared parquet fixtures (/root/testdata/sf*). The document table
-supplies doc ids; geometry is derived via ``derive`` (bit-identical in
-Spark / DuckDB / numpy), so each Spark pipeline has an exact relational
-oracle.
+Each ``catalog_<family>.py`` module owns its queries and declares:
 
-Column-name contract: Spark output and oracle SQL use identical aliases.
-Float columns that are per-row deterministic are emitted raw; aggregates
-that sum many doubles are rounded on BOTH sides to absorb accumulation
-order (documented per query).
+- ``QUERIES``: {name: fn(spark, sf_dir) -> DataFrame};
+- ``ORACLE_SQL``: {name: DuckDB SQL} over the same fixtures, with the
+  same column aliases;
+- ``HEADLINE`` (optional): the names ``bench.py`` times by default;
+- ``ROWS_ONLY`` (optional): {name: reason} for a query with no oracle.
+
+``merge`` folds them into one catalog, in module-name order, and raises
+at import on a name declared by two modules, an oracle or mark for a
+query the module does not declare, and an oracle-less query without a
+``ROWS_ONLY`` reason. The catalog leads with each module's first query,
+so samplers that take only the first N queries cover every family.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
+import pkgutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark import derive
+import whitebox_tools_spark
+from whitebox_tools_spark.catalog_core import TILE, _docs_geo
 from whitebox_tools_spark.operators import tiling
-from whitebox_tools_spark.operators.pip import clip_points, tag_polygon
-from whitebox_tools_spark.operators.radius_join import knn_join, radius_join
+from whitebox_tools_spark.operators.pip import tag_polygon
 from whitebox_tools_spark.sources import vectors
-from whitebox_tools_spark.sources.tables import documents
-
-# ---------------------------------------------------------------- helpers
-
-TILE = dict(origin_x=0.0, origin_y=0.0, width=250.0, height=250.0)
-RADIUS = 25.0
-KNN_K = 4
-KNN_RADIUS = 50.0
-
-_GEO_SQL = derive.sql_geometry_select("doc_id")
-
-_PTS_CTE = f"pts AS (SELECT doc_id, {_GEO_SQL} FROM documents)"
-
-# tile grid CTEs shared by the tiling oracles (LidarTile arithmetic,
-# lidar_tile.rs:257-282)
-_TILE_CTES = f"""
-{_PTS_CTE},
-ext AS (SELECT min(x) AS mn_x, max(x) AS mx_x, min(y) AS mn_y, max(y) AS mx_y FROM pts),
-grid AS (SELECT floor((mn_x - 0.0) / 250.0) AS sx, ceil((mx_x - 0.0) / 250.0) AS ex,
-                floor((mn_y - 0.0) / 250.0) AS sy, ceil((mx_y - 0.0) / 250.0) AS ey
-         FROM ext),
-tiles AS (SELECT doc_id, x, y,
-                 CAST(floor((x - 0.0) / 250.0 - sx) AS BIGINT) AS tile_col,
-                 CAST(floor((y - 0.0) / 250.0 - sy) AS BIGINT) AS tile_row,
-                 CAST(abs(ex - sx) AS BIGINT) AS n_cols
-          FROM pts CROSS JOIN grid)
-"""
 
 
-def _docs_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return derive.with_geometry(documents(spark, sf_dir), "doc_id")
-
-
-def _points_queries_split(spark: SparkSession, sf_dir: str):
-    """Deterministic split: doc_id % 10 == 0 -> query side, else point side."""
-    geo = _docs_geo(spark, sf_dir)
-    pts = geo.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0).select(
-        F.col("doc_id").alias("pid"), "x", "y", "z"
-    )
-    qs = geo.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0).select(
-        F.col("doc_id").alias("qid"), "x", "y"
-    )
-    return pts, qs
-
-
-_SPLIT_CTES = f"""
-{_PTS_CTE},
-p AS (SELECT doc_id AS pid, x, y, z FROM pts WHERE doc_id % 10 <> 0),
-q AS (SELECT doc_id AS qid, x, y FROM pts WHERE doc_id % 10 = 0)
-"""
-
-
-# ---------------------------------------------------------------- queries
-
-
-def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tiling.assign_tiles(_docs_geo(spark, sf_dir), **TILE).select(
-        "doc_id", "x", "y", "tile_col", "tile_row", "tile"
+def merge(modules) -> tuple[dict, dict, tuple, dict]:
+    """(QUERIES, ORACLE_SQL, HEADLINE, ROWS_ONLY) of ``modules``, in order."""
+    owner: dict[str, str] = {}
+    queries: dict = {}
+    oracles: dict[str, str] = {}
+    headline: list[str] = []
+    rows_only: dict[str, str] = {}
+    firsts: list[str] = []
+    for mod in modules:
+        name, qs, oracle = mod.__name__, mod.QUERIES, mod.ORACLE_SQL
+        marks = tuple(getattr(mod, "HEADLINE", ()))
+        reasons = getattr(mod, "ROWS_ONLY", {})
+        for q in qs:
+            if q in owner:
+                raise ValueError(f"catalog: {q!r} is declared by {owner[q]} and {name}")
+            owner[q] = name
+        unknown = (set(oracle) | set(marks) | set(reasons)) - set(qs)
+        if unknown:
+            raise ValueError(f"{name}: oracle or mark for undeclared queries {sorted(unknown)}")
+        bare = set(qs) - set(oracle)
+        if bare != set(reasons):
+            raise ValueError(
+                f"{name}: queries without an oracle {sorted(bare)} "
+                f"differ from its ROWS_ONLY {sorted(reasons)}"
+            )
+        firsts += list(qs)[:1]
+        queries.update(qs)
+        oracles.update(oracle)
+        headline += marks
+        rows_only.update(reasons)
+    lead = set(firsts)
+    order = firsts + [q for q in queries if q not in lead]
+    return (
+        {q: queries[q] for q in order},
+        {q: oracles[q] for q in order if q in oracles},
+        tuple(headline),
+        rows_only,
     )
 
 
-def q_tile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tiling.lidar_tile(_docs_geo(spark, sf_dir), min_points=2, **TILE).select(
-        "doc_id", "tile"
-    )
+def _catalog_modules():
+    infos = sorted(pkgutil.iter_modules(whitebox_tools_spark.__path__), key=lambda i: i.name)
+    for info in infos:
+        if info.name.startswith("catalog_"):
+            mod = importlib.import_module(f"whitebox_tools_spark.{info.name}")
+            if hasattr(mod, "QUERIES"):
+                yield mod
 
 
-def q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tiling.tile_counts(
-        tiling.assign_tiles(_docs_geo(spark, sf_dir), **TILE)
-    ).select("tile", "n_points")
-
-
-def q_clip_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return clip_points(_docs_geo(spark, sf_dir), vectors.rect_layer(), "semi").select(
-        "doc_id", "x", "y"
-    )
-
-
-def q_clip_semi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clip as clip_semi, forced onto the no-broadcast cell-join
-    strategy (operators/pip_cells.py) so the huge-layer path has its own
-    oracle row."""
-    return clip_points(
-        _docs_geo(spark, sf_dir), vectors.rect_layer(), "semi", strategy="cells"
-    ).select("doc_id", "x", "y")
-
-
-def q_clip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return clip_points(_docs_geo(spark, sf_dir), vectors.rect_layer(), "anti").select(
-        "doc_id", "x", "y"
-    )
-
-
-def q_tag_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tag_polygon(_docs_geo(spark, sf_dir), vectors.rect_layer()).select(
-        "doc_id", "poly_fid"
-    )
-
-
-def q_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts, qs = _points_queries_split(spark, sf_dir)
-    return radius_join(pts, qs, RADIUS).select(
-        "qid", F.col("pid_p").alias("pid"), "dist"
-    )
-
-
-def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts, qs = _points_queries_split(spark, sf_dir)
-    return knn_join(pts, qs, k=KNN_K, radius=KNN_RADIUS).select(
-        "qid", F.col("pid_p").alias("pid"), "dist", "knn_rank"
-    )
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "tile_assign": q_tile_assign,
-    "tile_filter": q_tile_filter,
-    "tile_counts": q_tile_counts,
-    "clip_semi": q_clip_semi,
-    "clip_semi_cells": q_clip_semi_cells,
-    "clip_anti": q_clip_anti,
-    "tag_polygon": q_tag_polygon,
-    "radius_join": q_radius_join,
-    "knn_join": q_knn_join,
-}
-
-# family catalogs merged at import (each module pairs QUERIES + ORACLE_SQL)
-from whitebox_tools_spark import catalog_grid as _cat_grid  # noqa: E402
-from whitebox_tools_spark import catalog_focal as _cat_focal  # noqa: E402
-from whitebox_tools_spark import catalog_zonal as _cat_zonal  # noqa: E402
-from whitebox_tools_spark import catalog_attr as _cat_attr  # noqa: E402
-from whitebox_tools_spark import catalog_docs as _cat_docs  # noqa: E402
-from whitebox_tools_spark import catalog_local as _cat_local  # noqa: E402
-from whitebox_tools_spark import catalog_iter as _cat_iter  # noqa: E402
-from whitebox_tools_spark import catalog_enhance as _cat_enh  # noqa: E402
-from whitebox_tools_spark import catalog_trend as _cat_trend  # noqa: E402
-from whitebox_tools_spark import catalog_cluster as _cat_cluster  # noqa: E402
-from whitebox_tools_spark import catalog_terrain as _cat_terr  # noqa: E402
-from whitebox_tools_spark import catalog_filters2 as _cat_f2  # noqa: E402
-from whitebox_tools_spark import catalog_streams as _cat_str  # noqa: E402
-from whitebox_tools_spark import catalog_stats as _cat_stats  # noqa: E402
-from whitebox_tools_spark import catalog_hydro2 as _cat_h2  # noqa: E402
-from whitebox_tools_spark import catalog_tin as _cat_tin  # noqa: E402
-from whitebox_tools_spark import catalog_shapes2 as _cat_sh2  # noqa: E402
-from whitebox_tools_spark import catalog_lidar as _cat_lidar  # noqa: E402
-from whitebox_tools_spark import catalog_terrain2 as _cat_t2  # noqa: E402
-from whitebox_tools_spark import catalog_color as _cat_col  # noqa: E402
-from whitebox_tools_spark import catalog_cost as _cat_cost  # noqa: E402
-from whitebox_tools_spark import catalog_streams2 as _cat_s2  # noqa: E402
-from whitebox_tools_spark import catalog_terrain3 as _cat_t3  # noqa: E402
-from whitebox_tools_spark import catalog_hydro3 as _cat_h3  # noqa: E402
-from whitebox_tools_spark import catalog_overlay as _cat_ov  # noqa: E402
-from whitebox_tools_spark import catalog_misc2 as _cat_m2  # noqa: E402
-from whitebox_tools_spark import catalog_misc3 as _cat_m3  # noqa: E402
-from whitebox_tools_spark import catalog_dinf as _cat_di  # noqa: E402
-from whitebox_tools_spark import catalog_misc4 as _cat_m4  # noqa: E402
-from whitebox_tools_spark import catalog_misc5 as _cat_m5  # noqa: E402
-from whitebox_tools_spark import catalog_misc6 as _cat_m6  # noqa: E402
-from whitebox_tools_spark import catalog_morpho as _cat_mor  # noqa: E402
-from whitebox_tools_spark import catalog_aniso as _cat_an  # noqa: E402
-from whitebox_tools_spark import catalog_fps as _cat_fps  # noqa: E402
-from whitebox_tools_spark import catalog_isi as _cat_isi  # noqa: E402
-from whitebox_tools_spark import catalog_bsc as _cat_bsc  # noqa: E402
-from whitebox_tools_spark import catalog_more as _cat_more  # noqa: E402
-from whitebox_tools_spark import catalog_sibson as _cat_sib  # noqa: E402
-from whitebox_tools_spark import catalog_io as _cat_io  # noqa: E402
-from whitebox_tools_spark import catalog_streaming as _cat_strm  # noqa: E402
-from whitebox_tools_spark import catalog_lm as _cat_lm  # noqa: E402
-from whitebox_tools_spark import catalog_stack as _cat_stk  # noqa: E402
-from whitebox_tools_spark import catalog_lidarx as _cat_lx  # noqa: E402
-from whitebox_tools_spark import catalog_vecx as _cat_vx  # noqa: E402
-
-QUERIES.update(_cat_grid.QUERIES)
-QUERIES.update(_cat_focal.QUERIES)
-QUERIES.update(_cat_zonal.QUERIES)
-QUERIES.update(_cat_attr.QUERIES)
-QUERIES.update(_cat_docs.QUERIES)
-QUERIES.update(_cat_local.QUERIES)
-QUERIES.update(_cat_iter.QUERIES)
-QUERIES.update(_cat_enh.QUERIES)
-QUERIES.update(_cat_trend.QUERIES)
-QUERIES.update(_cat_cluster.QUERIES)
-QUERIES.update(_cat_terr.QUERIES)
-QUERIES.update(_cat_f2.QUERIES)
-QUERIES.update(_cat_str.QUERIES)
-QUERIES.update(_cat_stats.QUERIES)
-QUERIES.update(_cat_h2.QUERIES)
-QUERIES.update(_cat_tin.QUERIES)
-QUERIES.update(_cat_sh2.QUERIES)
-QUERIES.update(_cat_lidar.QUERIES)
-QUERIES.update(_cat_t2.QUERIES)
-QUERIES.update(_cat_col.QUERIES)
-QUERIES.update(_cat_cost.QUERIES)
-QUERIES.update(_cat_s2.QUERIES)
-QUERIES.update(_cat_t3.QUERIES)
-QUERIES.update(_cat_h3.QUERIES)
-QUERIES.update(_cat_ov.QUERIES)
-QUERIES.update(_cat_m2.QUERIES)
-QUERIES.update(_cat_m3.QUERIES)
-QUERIES.update(_cat_di.QUERIES)
-QUERIES.update(_cat_m4.QUERIES)
-QUERIES.update(_cat_m5.QUERIES)
-QUERIES.update(_cat_m6.QUERIES)
-QUERIES.update(_cat_mor.QUERIES)
-QUERIES.update(_cat_an.QUERIES)
-QUERIES.update(_cat_fps.QUERIES)
-QUERIES.update(_cat_isi.QUERIES)
-QUERIES.update(_cat_bsc.QUERIES)
-QUERIES.update(_cat_more.QUERIES)
-QUERIES.update(_cat_sib.QUERIES)
-QUERIES.update(_cat_io.QUERIES)
-QUERIES.update(_cat_strm.QUERIES)
-QUERIES.update(_cat_lm.QUERIES)
-QUERIES.update(_cat_stk.QUERIES)
-QUERIES.update(_cat_lx.QUERIES)
-QUERIES.update(_cat_vx.QUERIES)
-
-
-# ------------------------------------------------------------- oracle SQL
-
-
-def _oracle_radius() -> str:
-    inv_r = 1.0 / (RADIUS * 0.5)
-    return f"""
-WITH {_SPLIT_CTES},
-pc AS (SELECT *, CAST(floor(x * {inv_r!r}) AS BIGINT) AS ci,
-                 CAST(floor(y * {inv_r!r}) AS BIGINT) AS cj FROM p),
-qc AS (SELECT *, CAST(floor(x * {inv_r!r}) AS BIGINT) AS ci,
-                 CAST(floor(y * {inv_r!r}) AS BIGINT) AS cj FROM q)
-SELECT qc.qid AS qid, pc.pid AS pid,
-       sqrt((qc.x - pc.x) * (qc.x - pc.x) + (qc.y - pc.y) * (qc.y - pc.y)) AS dist
-FROM qc JOIN pc
-  ON abs(qc.ci - pc.ci) <= 2 AND abs(qc.cj - pc.cj) <= 2
-WHERE (qc.x - pc.x) * (qc.x - pc.x) + (qc.y - pc.y) * (qc.y - pc.y)
-      <= {RADIUS * RADIUS!r}
-"""
-
-
-def _oracle_knn() -> str:
-    inv_r = 1.0 / (KNN_RADIUS * 0.5)
-    k = KNN_K
-    return f"""
-WITH {_SPLIT_CTES},
-pc AS (SELECT *, CAST(floor(x * {inv_r!r}) AS BIGINT) AS ci,
-                 CAST(floor(y * {inv_r!r}) AS BIGINT) AS cj FROM p),
-qc AS (SELECT *, CAST(floor(x * {inv_r!r}) AS BIGINT) AS ci,
-                 CAST(floor(y * {inv_r!r}) AS BIGINT) AS cj FROM q),
-pairs AS (
-  SELECT qc.qid, pc.pid, pc.x AS px, pc.y AS py,
-         greatest(greatest(abs(pc.ci - qc.ci), abs(pc.cj - qc.cj)), 1) AS shell,
-         (qc.x - pc.x) * (qc.x - pc.x) + (qc.y - pc.y) * (qc.y - pc.y) AS d2
-  FROM qc CROSS JOIN pc),
-ranked AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY shell) AS rn
-           FROM pairs),
-sstop AS (SELECT qid,
-                 coalesce(max(CASE WHEN rn = {k} THEN shell END), max(shell)) AS s_stop
-          FROM ranked GROUP BY qid),
-cand AS (SELECT r.* FROM ranked r JOIN sstop s
-           ON r.qid = s.qid AND r.shell <= s.s_stop),
-topk AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY d2, px, py)
-                AS knn_rank
-         FROM cand)
-SELECT qid, pid, sqrt(d2) AS dist, CAST(knn_rank AS INT) AS knn_rank
-FROM topk WHERE knn_rank <= {k}
-"""
-
-
-ORACLE_SQL: dict[str, str] = {
-    "tile_assign": f"""
-WITH {_TILE_CTES}
-SELECT doc_id, x, y, tile_col, tile_row, tile_row * n_cols + tile_col AS tile
-FROM tiles
-""",
-    "tile_filter": f"""
-WITH {_TILE_CTES},
-t AS (SELECT doc_id, tile_row * n_cols + tile_col AS tile FROM tiles)
-SELECT doc_id, tile FROM t
-QUALIFY count(*) OVER (PARTITION BY tile) > 2
-""",
-    "tile_counts": f"""
-WITH {_TILE_CTES},
-t AS (SELECT doc_id, tile_row * n_cols + tile_col AS tile FROM tiles)
-SELECT tile, count(*) AS n_points FROM t GROUP BY tile
-""",
-    "clip_semi": f"""
-WITH {_PTS_CTE}
-SELECT doc_id, x, y FROM pts WHERE {vectors.rect_layer_sql_predicate()}
-""",
-    "clip_semi_cells": f"""
-WITH {_PTS_CTE}
-SELECT doc_id, x, y FROM pts WHERE {vectors.rect_layer_sql_predicate()}
-""",
-    "clip_anti": f"""
-WITH {_PTS_CTE}
-SELECT doc_id, x, y FROM pts WHERE NOT {vectors.rect_layer_sql_predicate()}
-""",
-    "tag_polygon": f"""
-WITH {_PTS_CTE}
-SELECT doc_id, CAST({vectors.rect_layer_fid_case()} AS BIGINT) AS poly_fid FROM pts
-""",
-    "radius_join": _oracle_radius(),
-    "knn_join": _oracle_knn(),
-}
-
-ORACLE_SQL.update(_cat_grid.ORACLE_SQL)
-ORACLE_SQL.update(_cat_focal.ORACLE_SQL)
-ORACLE_SQL.update(_cat_zonal.ORACLE_SQL)
-ORACLE_SQL.update(_cat_attr.ORACLE_SQL)
-ORACLE_SQL.update(_cat_docs.ORACLE_SQL)
-ORACLE_SQL.update(_cat_local.ORACLE_SQL)
-ORACLE_SQL.update(_cat_iter.ORACLE_SQL)
-ORACLE_SQL.update(_cat_enh.ORACLE_SQL)
-ORACLE_SQL.update(_cat_trend.ORACLE_SQL)
-ORACLE_SQL.update(_cat_cluster.ORACLE_SQL)
-ORACLE_SQL.update(_cat_terr.ORACLE_SQL)
-ORACLE_SQL.update(_cat_f2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_str.ORACLE_SQL)
-ORACLE_SQL.update(_cat_stats.ORACLE_SQL)
-ORACLE_SQL.update(_cat_h2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_tin.ORACLE_SQL)
-ORACLE_SQL.update(_cat_sh2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_lidar.ORACLE_SQL)
-ORACLE_SQL.update(_cat_t2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_col.ORACLE_SQL)
-ORACLE_SQL.update(_cat_cost.ORACLE_SQL)
-ORACLE_SQL.update(_cat_s2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_t3.ORACLE_SQL)
-ORACLE_SQL.update(_cat_h3.ORACLE_SQL)
-ORACLE_SQL.update(_cat_ov.ORACLE_SQL)
-ORACLE_SQL.update(_cat_m2.ORACLE_SQL)
-ORACLE_SQL.update(_cat_m3.ORACLE_SQL)
-ORACLE_SQL.update(_cat_di.ORACLE_SQL)
-ORACLE_SQL.update(_cat_m4.ORACLE_SQL)
-ORACLE_SQL.update(_cat_m5.ORACLE_SQL)
-ORACLE_SQL.update(_cat_m6.ORACLE_SQL)
-ORACLE_SQL.update(_cat_mor.ORACLE_SQL)
-ORACLE_SQL.update(_cat_an.ORACLE_SQL)
-ORACLE_SQL.update(_cat_fps.ORACLE_SQL)
-ORACLE_SQL.update(_cat_isi.ORACLE_SQL)
-ORACLE_SQL.update(_cat_bsc.ORACLE_SQL)
-ORACLE_SQL.update(_cat_more.ORACLE_SQL)
-ORACLE_SQL.update(_cat_sib.ORACLE_SQL)
-ORACLE_SQL.update(_cat_io.ORACLE_SQL)
-ORACLE_SQL.update(_cat_strm.ORACLE_SQL)
-ORACLE_SQL.update(_cat_lm.ORACLE_SQL)
-ORACLE_SQL.update(_cat_stk.ORACLE_SQL)
-ORACLE_SQL.update(_cat_lx.ORACLE_SQL)
-ORACLE_SQL.update(_cat_vx.ORACLE_SQL)
-
-# Lead the catalog with one representative per operator family: external
-# samplers that take only the first N queries (the driver's correctness
-# gate samples ~50) then cover every family, not just the two oldest
-# catalog modules.
-_PRIORITY = [
-    # flagship core: tiling / PIP / neighbour joins / gridding
-    "tile_assign", "tile_filter", "clip_semi", "tag_polygon", "radius_join",
-    "knn_join", "idw_grid", "nn_grid", "block_max",
-    # raster <-> vector + focal/terrain/zonal
-    "points_raster_last", "polygons_raster", "raster_to_points",
-    "extract_values", "slope", "hillshade", "mean_filter", "zonal_stats",
-    "hex_bin",
-    # hydrology / streams
-    "d8_flow_accum", "fill_depressions", "breach_depressions", "basins",
-    "watershed", "strahler_order", "stream_link_id", "dinf_flow_accum",
-    "longest_flowpath",
-    # vector overlay + geometry output
-    "polygon_overlay", "intersect_geom", "union_geom", "dissolve",
-    "dissolve_geom", "buffer_vector_geom", "line_intersections",
-    "split_with_lines", "polygonize",
-    # terrain + image + stats
-    "dev_from_mean_elev", "geomorphons", "viewshed", "gaussian_filter",
-    "histogram_equalization", "covariance_matrix",
-    "kmeans", "anova",
-    # LLM-pipeline ops
-    "exact_dedup", "minhash_pairs", "simhash_pairs", "token_stats",
-    "quality", "lang_id", "ann_topk", "lsh_topk", "embed_near_dup",
-    "media_meta",
-    # round-2 additions
-    "eliminate_coincident", "modified_kmeans", "dinf_mass_flux",
-    "long_profile_points", "impoundment_depth",
-]
-_priority = [q for q in _PRIORITY if q in QUERIES]
-_rest = [q for q in QUERIES if q not in set(_priority)]
-QUERIES = {q: QUERIES[q] for q in _priority + _rest}
-ORACLE_SQL = {q: ORACLE_SQL[q] for q in _priority + _rest if q in ORACLE_SQL}
+QUERIES, ORACLE_SQL, HEADLINE, ROWS_ONLY = merge(_catalog_modules())
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

@@ -1,7 +1,7 @@
 """Session-scoped cache of the base rasters/graphs every catalog query
 re-derives (z rasters, D8 dirs, flow accumulation, streams, filled DEM).
 
-The driver and bench run ~227 queries against ONE sf_dir in one session;
+The driver and bench run the whole catalog against ONE sf_dir in one session;
 without this each query re-executes the document scan -> derive ->
 points_to_raster (and often the iterative D8 accumulation) from scratch.
 Each entry is localCheckpoint'ed once per (session, sf_dir) — the

@@ -100,6 +100,8 @@ QUERIES = {
     "viewshed_sweep": q_viewshed_sweep,
 }
 
+HEADLINE = ("strahler_order", "viewshed", "viewshed_sweep")
+
 
 # ------------------------------------------------------------- oracle SQL
 

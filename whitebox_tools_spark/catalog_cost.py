@@ -143,6 +143,8 @@ QUERIES = {
     "line_intersections": q_line_intersections,
 }
 
+HEADLINE = ("line_intersections",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

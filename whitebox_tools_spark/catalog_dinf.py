@@ -41,6 +41,8 @@ QUERIES = {
     "voronoi_raster": q_voronoi,
 }
 
+HEADLINE = ("dinf_flow_accum",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

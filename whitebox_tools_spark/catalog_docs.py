@@ -1366,6 +1366,11 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["bpe_train"] = q_bpe_train
+ROWS_ONLY = {
+    "bpe_train": "iterative merge training: each round's pair counts depend on the "
+    "previous round's segmentation; pinned against a pure-Python BPE reference in "
+    "tests/test_docs_ops.py::TestBpeTrain",
+}
 
 
 # ------------------------------------------------- product quantization
@@ -1612,3 +1617,15 @@ SELECT qid, vec_id, round(ad2, 6) AS ad2, rank FROM r WHERE rank <= {ANN_K}
 
 
 ORACLE_SQL["ivfpq_topk"] = _ivfpq_oracle()
+
+
+HEADLINE = (
+    "exact_dedup", "minhash_pairs", "simhash_pairs", "token_stats", "quality", "lang_id",
+    "ann_topk", "lsh_topk", "media_meta", "ivf_topk", "span_invariant",
+    "media_decode_real", "media_decode_wav", "ngram_jaccard", "media_decode_png",
+    "media_decode_jpeg", "media_decode_gif", "media_decode_avi", "audio_stats",
+    "image_stats", "video_frame_sample", "pii_scrub", "dedup_clusters", "pack_sequences",
+    "split_corpus", "build_vocab", "repetition_signals", "decontaminate",
+    "quantize_embeddings", "bm25_score", "dup_spans", "bpe_train", "pq_topk", "bigram_lm",
+    "ivfpq_topk",
+)

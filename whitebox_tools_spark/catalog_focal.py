@@ -127,6 +127,8 @@ QUERIES = {
     "stdev_filter": q_stdev_filter,
 }
 
+HEADLINE = ("slope", "mean_filter", "hillshade")
+
 
 # ------------------------------------------------------------- oracle SQL
 

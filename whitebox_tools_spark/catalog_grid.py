@@ -168,6 +168,10 @@ QUERIES = {
     "extract_values": q_extract_values,
 }
 
+HEADLINE = (
+    "idw_grid", "block_max", "points_raster_last", "raster_to_points", "extract_values"
+)
+
 
 # ------------------------------------------------------------- oracle SQL
 

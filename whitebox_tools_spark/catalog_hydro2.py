@@ -95,6 +95,8 @@ QUERIES = {
         hydro2.trace_downslope_flowpaths(_pour(s, d), _z(s, d), GRID, TILE_SIZE)),
 }
 
+HEADLINE = ("fill_depressions", "basins")
+
 
 # ------------------------------------------------------------- oracle SQL
 

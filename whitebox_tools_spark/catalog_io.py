@@ -996,6 +996,13 @@ QUERIES = {
     "shapefile_m_roundtrip": q_shapefile_m_roundtrip,
 }
 
+HEADLINE = (
+    "geotiff_roundtrip", "las_roundtrip", "las14_roundtrip", "bigtiff_roundtrip",
+    "rgb_roundtrip", "las_zip_roundtrip", "jpeg_in_tiff_roundtrip",
+    "cog_overviews_roundtrip", "geojson_roundtrip", "geojsonl_scan",
+    "geojsonl_points_scan",
+)
+
 ORACLE_SQL = {
     "geotiff_roundtrip": _ORACLE_GEOTIFF,
     "geotiff_pred_roundtrip": _ORACLE_GEOTIFF_PRED,

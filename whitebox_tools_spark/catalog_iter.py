@@ -82,6 +82,8 @@ QUERIES = {
     "watershed": q_watershed,
 }
 
+HEADLINE = ("d8_flow_accum", "watershed", "euclidean_distance")
+
 
 # ------------------------------------------------------------- oracle SQL
 

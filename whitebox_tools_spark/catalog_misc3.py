@@ -77,6 +77,8 @@ QUERIES = {
         m3.flow_length_diff(_z(s, d), GRID, TILE_SIZE), round6=True),
 }
 
+HEADLINE = ("burn_streams_at_roads",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

@@ -68,6 +68,8 @@ QUERIES = {
     "geomorphons": q_geomorphons,
 }
 
+HEADLINE = ("cost_pathway",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

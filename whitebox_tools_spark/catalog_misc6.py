@@ -86,6 +86,8 @@ QUERIES = {
     "buffer_vector_area": q_buffer_vector,
 }
 
+HEADLINE = ("lidar_segmentation_filter",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

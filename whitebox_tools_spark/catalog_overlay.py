@@ -100,6 +100,8 @@ QUERIES = {
     "narrowness_index": q_narrowness,
 }
 
+HEADLINE = ("polygon_overlay", "dissolve", "split_with_lines", "narrowness_index")
+
 
 # ------------------------------------------------------------- oracle SQL
 

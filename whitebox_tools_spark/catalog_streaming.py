@@ -72,6 +72,11 @@ QUERIES = {
     "streaming_media_stats": q_streaming_media_stats,
 }
 
+HEADLINE = (
+    "streaming_window_counts", "streaming_session_peaks", "streaming_exact_dedup",
+    "streaming_media_stats",
+)
+
 # The streaming tile grid is pinned to the derived-coordinate domain
 # (derive._RANGE: x,y in [0, 1000), tile 250x250 => 4 cols), because a
 # stream cannot pre-scan its extent; the oracle uses the same fixed grid.

@@ -68,6 +68,8 @@ QUERIES = {
     "remove_short_streams": _q(sop.remove_short_streams, min_length=MIN_LEN),
 }
 
+HEADLINE = ("stream_link_id",)
+
 
 # ------------------------------------------------------------- oracle SQL
 

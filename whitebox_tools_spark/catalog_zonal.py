@@ -64,6 +64,8 @@ QUERIES = {
     "hex_bin": q_hex_bin,
 }
 
+HEADLINE = ("zonal_stats", "hex_bin")
+
 from whitebox_tools_spark.catalog_grid import _CELLS_CTE  # noqa: E402
 
 ORACLE_SQL = {

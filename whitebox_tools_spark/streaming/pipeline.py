@@ -105,7 +105,7 @@ def streaming_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch tile assignment, verbatim, on a stream: derive coordinates
     and assign LidarTile cells as documents arrive. Stateless -> append
     mode; output is row-identical to the batch `tile_assign` query."""
-    from whitebox_tools_spark.api import TILE
+    from whitebox_tools_spark.catalog_core import TILE
 
     docs = stream_table(spark, sf_dir, "documents")
     # a stream cannot pre-scan its extent (compute_extent collects);
