@@ -1,6 +1,7 @@
 """PIP overlay join parity: Spark clip/erase vs numpy oracle."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark import derive
@@ -87,8 +88,30 @@ def test_tag_polygon(spark):
 
 def test_spans_preserved_through_clip(spark):
     docs = synth_docs(spark, 400)
-    out = clip_points(derive.with_geometry(docs, "doc_num"), rect_layer())
-    assert check_span_equality(docs, out) == 0
+    for strategy in ("auto", "arrow"):
+        out = clip_points(derive.with_geometry(docs, "doc_num"), rect_layer(), strategy=strategy)
+        assert out.count() > 0, strategy
+        assert check_span_equality(docs, out) == 0, strategy
+
+
+def test_null_coordinates_are_in_no_polygon(spark):
+    rows = [(0, None, 500.0), (1, 550.0, 500.0)]
+    df = spark.createDataFrame(rows, "doc_num long, x double, y double")
+    for strategy in ("expr", "arrow"):
+        tag = tag_polygon(df, rect_layer(), strategy=strategy).collect()
+        assert {r["doc_num"]: r["poly_fid"] for r in tag} == {0: None, 1: 2}, strategy
+        semi, anti = (
+            {r["doc_num"] for r in clip_points(df, rect_layer(), mode, strategy=strategy).collect()}
+            for mode in ("semi", "anti")
+        )
+        assert (semi, anti) == ({1}, {0}), strategy
+
+
+def test_unknown_strategy_is_rejected(spark):
+    df = spark.createDataFrame([(0, 550.0, 500.0)], "doc_num long, x double, y double")
+    for call in (clip_points, tag_polygon):
+        with pytest.raises(ValueError, match="auto, expr, arrow, cells"):
+            call(df, rect_layer(), strategy="arow")
 
 
 def test_expr_and_arrow_strategies_agree(spark):

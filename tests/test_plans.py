@@ -2,13 +2,15 @@
 actually picks. Catches regressions like a broadcast turning into a
 shuffle join or a filter failing to reach the parquet scan."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark import derive
 from whitebox_tools_spark.operators import tiling
-from whitebox_tools_spark.operators.pip import clip_points
+from whitebox_tools_spark.operators.pip import EXPR_MAX_VERTICES, clip_points, tag_polygon
 from whitebox_tools_spark.operators.radius_join import radius_join
 from whitebox_tools_spark.sources import vectors
+from whitebox_tools_spark.sources.docs import synth_docs
 from whitebox_tools_spark.sources.tables import documents
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -22,12 +24,43 @@ def _geo(spark):
     return derive.with_geometry(documents(spark, SF_DIR), "doc_id")
 
 
+def _big_layer():
+    """One 300-vertex disc: too large for the expr path, so 'auto' takes
+    the Arrow path."""
+    ang = np.linspace(0, 2 * np.pi, 300, endpoint=False)
+    ring = np.stack([500 + 300 * np.cos(ang), 500 + 300 * np.sin(ang)], axis=1)
+    layer = [vectors.PolygonFeature(fid=1, rings=[np.vstack([ring, ring[:1]])], holes=[False])]
+    assert sum(len(r) for r in layer[0].rings) > EXPR_MAX_VERTICES
+    return layer
+
+
 class TestPlans:
     def test_pip_clip_is_narrow(self, spark):
         """The broadcast-layer PIP join must be a NARROW map pass — zero
         shuffles over the document table."""
         plan = _plan(clip_points(_geo(spark), vectors.rect_layer(), "semi"))
         assert "Exchange" not in plan, plan
+
+    def test_arrow_pip_ships_only_coordinates(self, spark, tmp_path):
+        """The Arrow PIP path is a scalar pandas UDF over (x, y): Spark
+        evaluates it in ArrowEvalPython, not as an opaque MapInPandas over
+        the whole row, so a projection above it prunes the scan down to
+        the column that x and y derive from and ``spans`` is never read.
+        The docs are written here rather than read through ``_geo``: a
+        geometry frame that another test cached would replace the scan
+        with an InMemoryRelation."""
+        path = str(tmp_path / "docs")
+        synth_docs(spark, 200).write.parquet(path)
+        geo = derive.with_geometry(spark.read.parquet(path), "doc_num")
+        layer = _big_layer()
+        for df in (
+            tag_polygon(geo, layer).select("doc_num", "poly_fid"),
+            clip_points(geo, layer).select("doc_num"),
+        ):
+            plan = _plan(df)
+            assert "ArrowEvalPython" in plan, plan
+            assert "MapInPandas" not in plan, plan
+            assert "ReadSchema: struct<doc_num:bigint>" in plan, plan
 
     def test_tile_population_filter_broadcasts_counts(self, spark):
         """The tiny per-tile count table must broadcast back onto the big
