@@ -50,7 +50,9 @@ class TestFamilySmoke:
         from whitebox_tools_spark import derive
         from whitebox_tools_spark.sources.tables import documents
 
-        return derive.with_geometry(documents(spark, SF_DIR), "doc_id").cache()
+        geo = derive.with_geometry(documents(spark, SF_DIR), "doc_id").cache()
+        yield geo
+        geo.unpersist()
 
     @pytest.fixture(scope="class")
     def z(self, spark):

@@ -15,6 +15,9 @@ from whitebox_tools_spark.sources.tables import documents
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# physical nodes that evaluate Python
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -61,6 +64,38 @@ class TestPlans:
             assert "ArrowEvalPython" in plan, plan
             assert "MapInPandas" not in plan, plan
             assert "ReadSchema: struct<doc_num:bigint>" in plan, plan
+
+    def test_small_layer_paint_and_clip_run_no_python(self, spark):
+        """Paint, clip and erase over the 20-vertex rect_layer tag cell
+        centres on the JVM expression path: no Python node in the plan."""
+        from whitebox_tools_spark import api
+
+        for name in ("polygons_raster", "clip_raster", "erase_raster"):
+            plan = _plan(api.QUERIES[name](spark, SF_DIR))
+            for node in PYTHON_NODES:
+                assert node not in plan, (name, node, plan)
+
+    def test_large_layer_paint_and_clip_tag_once(self, spark):
+        """Above EXPR_MAX_VERTICES, paint and clip evaluate the Arrow tag
+        exactly once per cell: the paint's value join must not push a
+        null test of the tag below it, which would run the UDF twice."""
+        from whitebox_tools_spark.operators.gridding import GridConfig
+        from whitebox_tools_spark.operators.raster import (
+            clip_raster_to_polygon,
+            polygons_to_raster,
+        )
+
+        cfg = GridConfig(rows=20, cols=20, north=1000.0, west=0.0, res_x=50.0, res_y=50.0)
+        dem = spark.range(400).selectExpr(
+            "id div 20 AS row", "id % 20 AS col", "CAST(id AS DOUBLE) AS value"
+        )
+        for df in (
+            polygons_to_raster(spark, _big_layer(), cfg),
+            clip_raster_to_polygon(dem, _big_layer(), cfg),
+        ):
+            plan = _plan(df)
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "MapInPandas" not in plan, plan
 
     def test_tile_population_filter_broadcasts_counts(self, spark):
         """The tiny per-tile count table must broadcast back onto the big
@@ -152,8 +187,7 @@ class TestRound2Plans:
         from whitebox_tools_spark import api
 
         plan = _plan(api.QUERIES["viewshed"](spark, SF_DIR))
-        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
-                     "FlatMapGroupsInPandas"):
+        for node in PYTHON_NODES:
             assert node not in plan, node
         assert "HashJoin" in plan or "SortMergeJoin" in plan, plan
 

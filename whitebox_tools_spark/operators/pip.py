@@ -1,15 +1,36 @@
 """Point-in-polygon overlay joins (Clip / Erase / ClipLidarToPolygon family).
 
-Parity contracts:
-- Clip point mode (src/tools/gis_analysis/clip.rs:292-340): per point,
-  iterate ALL parts of the clip layer in order; bbox pre-test; a shell hit
-  sets inside=true, a hole hit sets inside=false; LAST matching part wins.
-- ClipLidarToPolygon (src/tools/lidar_analysis/clip_lidar_to_polygon.rs:
-  264-310): per polygon record, shells first (any hit -> inside), then
-  holes (any hit -> outside).
-- PIP kernel itself: winding even-odd, kernels/geometry.py.
+Parity contracts, (op, part_mode) -> the reference tool's rule:
 
-Scale design — two physical strategies, same semantics:
+  op, part_mode                    reference rule
+  -------------------------------  ---------------------------------------
+  tag_polygon, last_wins           Clip point mode (gis_analysis/clip.rs:
+                                   292-340): all parts of the layer in
+                                   (record, ring) order, bbox pre-test; the
+                                   LAST ring hit decides: its fid, or null
+                                   if it is a hole.
+  clip_points, last_wins           Clip point mode: inside iff the
+                                   last_wins tag is not null.
+  tag_polygon, shell_then_hole     VectorPolygonsToRaster (data_tools/
+                                   vector_polygons_to_raster.rs:386-560):
+                                   fid of the LAST record whose shells hold
+                                   the point and whose own holes do not.
+  raster.polygons_to_raster,       VectorPolygonsToRaster /
+  raster.clip_raster_to_polygon    ClipRasterToPolygon: the shell_then_hole
+                                   tag over cell centres (painted value;
+                                   clip keeps not null, erase keeps null).
+  clip_points, shell_then_hole     ClipLidarToPolygon (lidar_analysis/
+                                   clip_lidar_to_polygon.rs:264-310): per
+                                   record, shells first (any hit ->
+                                   inside), then holes (any hit ->
+                                   outside); the LAST record with any ring
+                                   hit decides, so a later record's hole
+                                   can clear an earlier record's shell.
+
+The PIP kernel itself is the even-odd winding of kernels/geometry.py;
+boundary points are outside.
+
+Scale design — three physical strategies, same semantics:
 - 'expr' (default for layers up to EXPR_MAX_VERTICES total vertices): the
   winding-number fold is emitted as pure JVM column expressions (a
   plain per-edge sum unrolled per ring, ``_inside_ring_col``), so the
@@ -62,6 +83,9 @@ EXPR_MAX_VERTICES = 256
 
 STRATEGIES = ("auto", "expr", "arrow", "cells")
 
+# the tag column a last_wins clip filters on
+_TAG = "_pip_tag"
+
 
 # --------------------------------------------------- JVM expression path
 
@@ -100,22 +124,10 @@ def _bbox_col(x: F.Column, y: F.Column, feat: PolygonFeature) -> F.Column:
     )
 
 
-def membership_col(
-    layer: list[PolygonFeature],
-    x: F.Column,
-    y: F.Column,
-    part_mode: PartMode = "last_wins",
-) -> F.Column:
-    """Boolean membership column replicating ``_membership`` exactly."""
+def membership_col(layer: list[PolygonFeature], x: F.Column, y: F.Column) -> F.Column:
+    """ClipLidarToPolygon membership as a boolean column; ``_membership``
+    is its numpy twin."""
     state = F.lit(False)
-    if part_mode == "last_wins":
-        for feat in layer:
-            bb = _bbox_col(x, y, feat)
-            for ring, hole in zip(feat.rings, feat.holes):
-                state = F.when(bb & _inside_ring_col(x, y, ring), F.lit(not hole)).otherwise(
-                    state
-                )
-        return state
     for feat in layer:
         bb = _bbox_col(x, y, feat)
         shell = F.lit(False)
@@ -138,22 +150,17 @@ def fid_col(
     y: F.Column,
     part_mode: PartMode = "last_wins",
 ) -> F.Column:
-    """Containing-feature fid column (null if none), last-wins order."""
+    """Tagging feature fid column (null if none); rules in ``tag_polygon``."""
     state = F.lit(None).cast("long")
-    if part_mode == "last_wins":
-        for feat in layer:
-            bb = _bbox_col(x, y, feat)
-            for ring, hole in zip(feat.rings, feat.holes):
-                val = F.lit(None).cast("long") if hole else F.lit(feat.fid).cast("long")
-                state = F.when(bb & _inside_ring_col(x, y, ring), val).otherwise(state)
-        return state
-    # shell_then_hole: first feature containing the point wins
     for feat in layer:
+        fid = F.lit(feat.fid).cast("long")
+        if part_mode == "shell_then_hole":
+            state = F.when(membership_col([feat], x, y), fid).otherwise(state)
+            continue
         bb = _bbox_col(x, y, feat)
-        m = membership_col([feat], x, y, "shell_then_hole")
-        state = F.when(
-            bb & m & state.isNull(), F.lit(feat.fid).cast("long")
-        ).otherwise(state)
+        for ring, hole in zip(feat.rings, feat.holes):
+            val = F.lit(None).cast("long") if hole else fid
+            state = F.when(bb & _inside_ring_col(x, y, ring), val).otherwise(state)
     return state
 
 
@@ -161,28 +168,14 @@ def _layer_vertices(layer: list[PolygonFeature]) -> int:
     return sum(len(r) for f in layer for r in f.rings)
 
 
-def _membership(
-    px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature], part_mode: PartMode
-) -> np.ndarray:
+def _membership(px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature]) -> np.ndarray:
+    """ClipLidarToPolygon membership per point: per feature record, shells
+    tested first (any hit -> true), then holes (any hit -> false,
+    overriding the shell verdict). The membership flag persists ACROSS
+    records in the reference (it is initialized once per point,
+    clip_lidar_to_polygon.rs:269), so a later record's verdict overwrites
+    an earlier one's wherever it hits."""
     inside = np.zeros(len(px), dtype=bool)
-    if part_mode == "last_wins":
-        # clip.rs flattens (bbox, ring, is_hole) across all features and
-        # iterates in order; last hit wins.
-        for feat in layer:
-            xmin, ymin, xmax, ymax = feat.bbox
-            in_bb = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-            if not in_bb.any():
-                continue
-            idx = np.nonzero(in_bb)[0]
-            for ring, hole in zip(feat.rings, feat.holes):
-                hit = point_in_poly(px[idx], py[idx], ring)
-                inside[idx[hit]] = not hole
-        return inside
-    # shell_then_hole: per feature record, shells tested first (any hit ->
-    # true), then holes (any hit -> false, overriding the shell verdict).
-    # The membership flag persists ACROSS records in the reference (it is
-    # initialized once per point, clip_lidar_to_polygon.rs:269), so a later
-    # record's verdict overwrites an earlier one's wherever it hits.
     for feat in layer:
         xmin, ymin, xmax, ymax = feat.bbox
         in_bb = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
@@ -214,7 +207,7 @@ def _strategy(strategy: str, layer: list[PolygonFeature]) -> str:
 def _fids(
     px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature], part_mode: PartMode
 ) -> np.ndarray:
-    """Containing-feature fid per point, -1 if none (``fid_col`` in numpy)."""
+    """Tag fid per point, -1 if none (``fid_col`` in numpy)."""
     fid = np.full(len(px), -1, dtype=np.int64)
     for feat in layer:
         xmin, ymin, xmax, ymax = feat.bbox
@@ -227,8 +220,7 @@ def _fids(
                 hit = point_in_poly(px[idx], py[idx], ring)
                 fid[idx[hit]] = -1 if hole else feat.fid
         else:
-            m = _membership(px[idx], py[idx], [feat], "shell_then_hole")
-            fid[idx[m & (fid[idx] == -1)]] = feat.fid
+            fid[idx[_membership(px[idx], py[idx], [feat])]] = feat.fid
     return fid
 
 
@@ -247,20 +239,27 @@ def clip_points(
     y: str = "y",
     strategy: str = "auto",
 ) -> DataFrame:
-    """Spatial semi/anti join of a point table against a broadcast layer."""
+    """Spatial semi/anti join of a point table against a broadcast layer.
+
+    Under ``last_wins`` a point is inside iff its ``tag_polygon`` tag is
+    set; ``shell_then_hole`` is ClipLidarToPolygon's own membership rule."""
+    if part_mode == "last_wins":
+        tagged = tag_polygon(points, layer, part_mode, x, y, _TAG, strategy)
+        m = F.col(_TAG).isNotNull()
+        return tagged.where(m if mode == "semi" else ~m).drop(_TAG)
     strategy = _strategy(strategy, layer)
     if strategy == "cells":
         from whitebox_tools_spark.operators.pip_cells import clip_points_cells
 
-        return clip_points_cells(points, layer, mode, part_mode, x, y)
+        return clip_points_cells(points, layer, mode, x, y)
     if strategy == "expr":
-        m = membership_col(layer, F.col(x), F.col(y), part_mode)
+        m = membership_col(layer, F.col(x), F.col(y))
     else:
         bc = points.sparkSession.sparkContext.broadcast(layer)
 
         @F.pandas_udf(T.BooleanType())
         def inside(px: pd.Series, py: pd.Series) -> pd.Series:
-            return pd.Series(_membership(*_coords(px, py), bc.value, part_mode))
+            return pd.Series(_membership(*_coords(px, py), bc.value))
 
         m = inside(F.col(x), F.col(y))
     return points.where(m if mode == "semi" else ~m)
@@ -275,10 +274,19 @@ def tag_polygon(
     out: str = "poly_fid",
     strategy: str = "auto",
 ) -> DataFrame:
-    """Adds the containing feature fid (last-wins order), null if none.
+    """Adds the fid of the feature that tags each point, null if none.
 
-    This is the join form of the overlay (what Intersect point-mode needs to
-    merge attributes); fid assignment follows the same part iteration order.
+    This is the join form of the overlay (what Intersect point-mode needs
+    to merge attributes). The rule per part_mode (module table):
+
+      part_mode        tag (reference tool)                 read by
+      ---------------  -----------------------------------  -----------------
+      last_wins        fid of the last ring hit in          clip_points
+                       (record, ring) order, null if that   (last_wins):
+                       ring is a hole (Clip)                tag is not null
+      shell_then_hole  fid of the last record whose shells  raster paint,
+                       hold the point and whose own holes   clip and erase
+                       do not (VectorPolygonsToRaster)
     """
     strategy = _strategy(strategy, layer)
     if strategy == "cells":

@@ -4,10 +4,9 @@ The 'expr' and 'arrow' strategies in operators/pip.py both broadcast the
 whole polygon layer (inlined into the plan / sc.broadcast).  That is the
 right call while the layer fits in executor memory; a country-scale
 parcel layer (10^8+ vertices) does not.  This module evaluates the SAME
-membership semantics (clip.rs:292-340 last-wins part iteration,
-clip_lidar_to_polygon.rs:264-310 shell-then-hole; winding kernel
-poly_ops.rs:21-72) as two hash equi-joins, never materializing the layer
-on any single node:
+rules (the two tags and ClipLidarToPolygon membership tabled in
+operators/pip.py; winding kernel poly_ops.rs:21-72) as two hash
+equi-joins, never materializing the layer on any single node:
 
 1. bbox candidate join — feature bboxes are exploded to covering grid
    cells (cell edge ~ median feature bbox side, so ~4 cells/feature);
@@ -139,44 +138,32 @@ def _ring_hits(
     return pts, wn
 
 
+def _per_record(wn: DataFrame) -> DataFrame:
+    """(_pid, o, fid, held) per record with any ring hit; ``held``: the
+    record's shells hold the point and its own holes do not."""
+    return wn.groupBy(_PID, "o", "fid").agg(
+        (
+            (F.max(F.when(~F.col("hole"), 1).otherwise(0)) == 1)
+            & (F.max(F.when(F.col("hole"), 1).otherwise(0)) == 0)
+        ).alias("held")
+    )
+
+
 def membership_cells(
     points: DataFrame,
     layer: list[PolygonFeature],
-    part_mode: str = "last_wins",
     x: str = "x",
     y: str = "y",
 ) -> tuple[DataFrame, DataFrame]:
-    """(points_with_pid, (_pid, inside) for pids with at least one hit)."""
+    """(points_with_pid, (_pid, inside) for pids with at least one hit):
+    ClipLidarToPolygon membership, the last record with any hit decides."""
     pts, wn = _ring_hits(points, layer, x, y)
-    if part_mode == "last_wins":
-        st = (
-            wn.groupBy(_PID)
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("o"), F.col("ring_idx"), (~F.col("hole")).alias("v")
-                    )
-                ).alias("m")
-            )
-            .select(_PID, F.col("m.v").alias("inside"))
-        )
-    else:
-        per_feat = wn.groupBy(_PID, "o").agg(
-            (F.max(F.when(~F.col("hole"), 1).otherwise(0)) == 1).alias("shell_hit"),
-            (F.max(F.when(F.col("hole"), 1).otherwise(0)) == 1).alias("hole_hit"),
-        )
-        st = (
-            per_feat.groupBy(_PID)
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("o"),
-                        (F.col("shell_hit") & ~F.col("hole_hit")).alias("v"),
-                    )
-                ).alias("m")
-            )
-            .select(_PID, F.col("m.v").alias("inside"))
-        )
+    st = (
+        _per_record(wn)
+        .groupBy(_PID)
+        .agg(F.max(F.struct("o", "held")).alias("m"))
+        .select(_PID, F.col("m.held").alias("inside"))
+    )
     return pts, st
 
 
@@ -184,11 +171,10 @@ def clip_points_cells(
     points: DataFrame,
     layer: list[PolygonFeature],
     mode: str = "semi",
-    part_mode: str = "last_wins",
     x: str = "x",
     y: str = "y",
 ) -> DataFrame:
-    pts, st = membership_cells(points, layer, part_mode, x, y)
+    pts, st = membership_cells(points, layer, x, y)
     joined = pts.join(st, _PID, "left").withColumn(
         "inside", F.coalesce("inside", F.lit(False))
     )
@@ -206,30 +192,22 @@ def tag_polygon_cells(
 ) -> DataFrame:
     pts, wn = _ring_hits(points, layer, x, y)
     if part_mode == "last_wins":
-        st = (
-            wn.groupBy(_PID)
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("o"),
-                        F.col("ring_idx"),
-                        F.when(F.col("hole"), F.lit(None).cast("long"))
-                        .otherwise(F.col("fid"))
-                        .alias("v"),
-                    )
-                ).alias("m")
-            )
-            .select(_PID, F.col("m.v").alias(out))
+        st = wn.groupBy(_PID).agg(
+            F.max(
+                F.struct(
+                    F.col("o"),
+                    F.col("ring_idx"),
+                    F.when(F.col("hole"), F.lit(None).cast("long"))
+                    .otherwise(F.col("fid"))
+                    .alias("v"),
+                )
+            ).alias("m")
         )
     else:
-        per_feat = wn.groupBy(_PID, "o", "fid").agg(
-            (F.max(F.when(~F.col("hole"), 1).otherwise(0)) == 1).alias("shell_hit"),
-            (F.max(F.when(F.col("hole"), 1).otherwise(0)) == 1).alias("hole_hit"),
-        )
         st = (
-            per_feat.where(F.col("shell_hit") & ~F.col("hole_hit"))
+            _per_record(wn)
+            .where("held")
             .groupBy(_PID)
-            .agg(F.min(F.struct(F.col("o"), F.col("fid"))).alias("m"))
-            .select(_PID, F.col("m.fid").alias(out))
+            .agg(F.max(F.struct(F.col("o"), F.col("fid").alias("v"))).alias("m"))
         )
-    return pts.join(st, _PID, "left").drop(_PID)
+    return pts.join(st.select(_PID, F.col("m.v").alias(out)), _PID, "left").drop(_PID)

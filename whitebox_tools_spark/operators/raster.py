@@ -19,7 +19,7 @@ Parity contracts:
   246-253): per point, raster value at its (row, col); out-of-grid reads
   return nodata.
 - ClipRasterToPolygon / ErasePolygonFromRaster (clip_raster_to_polygon.rs:
-  236-300, erase_polygon_from_raster.rs): keep (resp. null-out) cells
+  236-300, erase_polygon_from_raster.rs): keep (resp. drop) the cells
   whose center is inside the polygon layer, holes honoured.
 
 Representation: a raster is the long-form DataFrame (row, col, value) —
@@ -28,23 +28,23 @@ cells absent or null = NoData. The grid geometry lives in GridConfig
 operators/focal.py.
 
 Scale design: every op here is a single projection + at most one
-groupBy/join; the polygon layer is broadcast (reference reads the whole
-shapefile into memory) and evaluated in Arrow-batched mapInPandas over
-cell centers — a narrow pass over the grid.
+groupBy/join. Paint and clip are point-in-polygon on cell centers: both
+call ``pip.tag_polygon``, whose 'auto' strategy picks by layer size — the
+JVM expression fold (no Python) up to ``pip.EXPR_MAX_VERTICES`` layer
+vertices, the Arrow UDF over (x, y) only above that. No op here runs
+mapInPandas.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import dataclasses
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from whitebox_tools_spark.kernels.geometry import point_in_poly
-from whitebox_tools_spark.operators.gridding import GridConfig
+from whitebox_tools_spark.localrel import local_df
+from whitebox_tools_spark.operators.gridding import GridConfig, cell_centers
+from whitebox_tools_spark.operators.pip import tag_polygon
 from whitebox_tools_spark.sources.vectors import PolygonFeature
 
 ASSIGN_MODES = ("first", "last", "min", "max", "sum")
@@ -152,32 +152,6 @@ def extract_raster_values_at_points(
 # ------------------------------------------------------------ polygon paint
 
 
-def _paint_membership(
-    px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature]
-) -> np.ndarray:
-    """Per cell-center: index into ``layer`` of the LAST record whose shell
-    contains it and whose own holes don't (-1 = background). Transcribes
-    vector_polygons_to_raster.rs:386-560 (per-record hole mask, last record
-    wins)."""
-    win = np.full(len(px), -1, dtype=np.int64)
-    for rec_idx, feat in enumerate(layer):
-        xmin, ymin, xmax, ymax = feat.bbox
-        in_bb = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-        if not in_bb.any():
-            continue
-        idx = np.nonzero(in_bb)[0]
-        hole_hit = np.zeros(len(idx), dtype=bool)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if hole:
-                hole_hit |= point_in_poly(px[idx], py[idx], ring)
-        shell_hit = np.zeros(len(idx), dtype=bool)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if not hole:
-                shell_hit |= point_in_poly(px[idx], py[idx], ring)
-        win[idx[shell_hit & ~hole_hit]] = rec_idx
-    return win
-
-
 def polygons_to_raster(
     spark: SparkSession,
     layer: list[PolygonFeature],
@@ -186,44 +160,24 @@ def polygons_to_raster(
 ) -> DataFrame:
     """VectorPolygonsToRaster. Output (row, col, value) for painted cells.
 
-    The grid is generated JVM-side; the broadcast layer paints cell centers
-    in Arrow batches (narrow pass, no shuffle)."""
-    from whitebox_tools_spark.operators.gridding import cell_centers
-
+    The grid is generated JVM-side and tagged with the record index of the
+    last record that paints each cell centre (``tag_polygon``'s
+    shell_then_hole rule); a broadcast join maps the index to the value."""
     # cell_centers uses (col+0.5)*res form; the paint tools use the
     # res/2 + col*res form (raster/mod.rs:620) — same values for the
     # fixtures' exact binary res, and kept consistent with the oracle SQL.
-    cells = cell_centers(spark, cfg)
-    bc = spark.sparkContext.broadcast(layer)
-    values = [float(f.attrs.get(field, f.fid)) for f in layer]
-    bc_vals = spark.sparkContext.broadcast(values)
-    schema = T.StructType(
-        [
-            T.StructField("row", T.LongType()),
-            T.StructField("col", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
+    recs = [dataclasses.replace(f, fid=i) for i, f in enumerate(layer)]
+    # a VALUES table needs a row: an empty layer gets one no tag matches
+    values = local_df(
+        spark,
+        [(i, float(f.attrs.get(field, f.fid))) for i, f in enumerate(layer)] or [(-1, 0.0)],
+        columns=["_rec", "value"],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lyr = bc.value
-        vals = np.asarray(bc_vals.value, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px = pdf["x"].to_numpy(dtype=np.float64)
-            py = pdf["y"].to_numpy(dtype=np.float64)
-            win = _paint_membership(px, py, lyr)
-            hit = win >= 0
-            yield pd.DataFrame(
-                {
-                    "row": pdf["row"].to_numpy()[hit],
-                    "col": pdf["col"].to_numpy()[hit],
-                    "value": vals[win[hit]],
-                }
-            )
-
-    return cells.mapInPandas(run, schema=schema)
+    cells = tag_polygon(cell_centers(spark, cfg), recs, "shell_then_hole", out="_rec")
+    # null-safe keys: a plain equi-join infers `_rec IS NOT NULL` and
+    # pushes it below the tag's projection, which evaluates the tag twice
+    on = cells["_rec"].eqNullSafe(values["_rec"])
+    return cells.join(F.broadcast(values), on).select("row", "col", "value")
 
 
 def clip_raster_to_polygon(
@@ -232,26 +186,15 @@ def clip_raster_to_polygon(
     cfg: GridConfig,
     erase: bool = False,
 ) -> DataFrame:
-    """ClipRasterToPolygon / ErasePolygonFromRaster: null out cells whose
+    """ClipRasterToPolygon / ErasePolygonFromRaster: drop the cells whose
     center falls outside (resp. inside) the layer; holes honoured
-    (clip_raster_to_polygon.rs:236-300)."""
-    spark = raster.sparkSession
-    bc = spark.sparkContext.broadcast(layer)
-    schema = raster.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lyr = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            row = pdf["row"].to_numpy(dtype=np.float64)
-            col = pdf["col"].to_numpy(dtype=np.float64)
-            px = cfg.west + cfg.res_x / 2.0 + col * cfg.res_x
-            py = cfg.north - cfg.res_y / 2.0 - row * cfg.res_y
-            inside = _paint_membership(px, py, lyr) >= 0
-            yield pdf[~inside if erase else inside]
-
-    return raster.mapInPandas(run, schema=schema)
+    (clip_raster_to_polygon.rs:236-300). Inside = a set ``tag_polygon``
+    shell_then_hole tag."""
+    x, y = center_cols(cfg)
+    cells = raster.withColumns({"_cx": x, "_cy": y})
+    cells = tag_polygon(cells, layer, "shell_then_hole", "_cx", "_cy", "_tag")
+    tag = F.col("_tag")
+    return cells.where(tag.isNull() if erase else tag.isNotNull()).drop("_cx", "_cy", "_tag")
 
 
 def flip_image(
