@@ -1,9 +1,14 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS]; writes the full record (every query's seconds
+under "queries") to .bench_build/bench/ and prints ONE JSON line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": <sf>, "docs_per_sec": ...}
+    {"metric": "...", "value": <total sec>, "unit": "sec", "sf": <sf>,
+     "flagship_docs_per_sec": ..., "host": {...},
+     "slowest": {name: sec, ... the 10 slowest}, "record": <path>}
+
+The line stays under 2000 chars whatever the headline set's size, so a
+caller that keeps only the tail of stdout still parses it.
 
 The headline set is ``api.HEADLINE``, the union of each catalog module's
 ``HEADLINE`` marks: one representative per operator family plus the
@@ -22,6 +27,20 @@ import json
 import os
 import sys
 import time
+
+RECORD_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_build", "bench")
+SLOWEST = 10
+
+
+def result_line(record: dict, path: str) -> str:
+    """The stdout JSON line for a full bench ``record`` written to
+    ``path``: every field but the per-query dict, which shrinks to the
+    ``SLOWEST`` queries."""
+    slowest = sorted(record["queries"].items(), key=lambda kv: kv[1], reverse=True)
+    line = {k: v for k, v in record.items() if k != "queries"}
+    line["slowest"] = dict(slowest[:SLOWEST])
+    line["record"] = path
+    return json.dumps(line)
 
 
 def _flagship_synth(spark, n_docs: int, cores: int):
@@ -222,7 +241,11 @@ def main() -> None:
             "efficiency_vs_vm_ceiling": round(eff / ctrl_eff, 3) if ctrl_eff else None,
         }
 
-    print(json.dumps(out))
+    os.makedirs(RECORD_DIR, exist_ok=True)
+    path = os.path.join(RECORD_DIR, f"bench-{time.strftime('%Y%m%dT%H%M%S')}-{os.getpid()}.json")
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1)
+    print(result_line(out, path))
 
 
 def _time_control(spark, cores: int, reps: int = 2) -> float:

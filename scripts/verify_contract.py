@@ -6,9 +6,14 @@ thread pool over one Spark session (Spark schedules concurrent jobs
 fine; each worker gets its own DuckDB connection).
 
 Usage: python scripts/verify_contract.py [sf_dir] [threads] [name_filter]
-Prints one line per query, a "BAD: [...]" summary, and a final
+Prints one line per query, a "BAD: [...]" summary, a
 "NOT-CONVERGED: [...]" line naming every fixpoint loop (``graph.ROUNDS``)
-that ran out of rounds.
+that ran out of rounds, and a final print-only "HUGE-METHOD: [...]" line
+of (query, bytes) for every query with a whole-stage codegen method above
+HotSpot's 8000-byte JIT limit (``session.huge_stages``): the stages that
+``session.get_spark`` runs per operator. Method size does not depend on
+the codegen limit, so the probe reads it under this script's plain
+session, where parity is checked.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import SparkSession
 
 from whitebox_tools_spark.api import ROWS_ONLY  # noqa: E402
 from whitebox_tools_spark.operators import graph  # noqa: E402
+from whitebox_tools_spark.session import huge_stages  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 THREADS = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -61,6 +67,7 @@ def main():
 
     names = [n for n in qs if _re.search(FILT, n)] if FILT else list(qs)
     bad = []
+    huge = []
 
     def run(name):
         t0 = time.time()
@@ -68,6 +75,7 @@ def main():
             sdf = qs[name](spark, SF)
             srows = [tuple(r) for r in sdf.collect()]
             scols = sdf.columns
+            huge.extend((name, size) for _, size in huge_stages(sdf))
             if name not in osql:
                 return name, f"rows-only {len(srows)}", time.time() - t0
             con = duckdb.connect()
@@ -102,6 +110,7 @@ def main():
     failures = [n for n, msg in bad if "rows-only" not in msg] + unexpected
     print("BAD:", failures, flush=True)
     print("NOT-CONVERGED:", [n for n, _, done in graph.ROUNDS if not done], flush=True)
+    print("HUGE-METHOD:", sorted(huge), flush=True)
     return 0 if not failures else 1
 
 

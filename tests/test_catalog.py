@@ -81,3 +81,44 @@ def test_catalog_head_covers_every_module():
     k = len(set(owner.values()))
     head = list(api.QUERIES)[:k]
     assert len({owner[q] for q in head}) == k
+
+
+def test_bench_result_line_fits_a_2000_char_tail():
+    """bench.py's one stdout line must parse from a 2000-char tail of
+    stdout: every headline query at a 7-char time, with the scaling block
+    and a long record path, still fits."""
+    import json
+
+    import bench
+
+    record = {
+        "metric": "headline_suite_wall",
+        "value": 99999.999,
+        "unit": "sec",
+        "queries": dict.fromkeys(api.HEADLINE, 999.999),
+        "sf": 0.001,
+        "n_docs": 500_000_000,
+        "flagship_docs_per_sec": 99_999_999.9,
+        "cores": 32,
+        "host": {
+            "loadavg_start": [99.99, 99.99, 99.99],
+            "loadavg_end": [99.99, 99.99, 99.99],
+            "control_sec": 999.999,
+        },
+        "scaling": {
+            "n_cores": 8,
+            "n_docs": 500_000_000,
+            "docs_per_sec_n": 99_999_999.9,
+            "docs_per_sec_4n": 99_999_999.9,
+            "efficiency": 0.999,
+            "control_efficiency": 0.999,
+            "efficiency_vs_vm_ceiling": 0.999,
+        },
+    }
+    path = f"{bench.RECORD_DIR}/bench-20990101T000000-4194304.json"
+    line = bench.result_line(record, path)
+    assert len(line) <= 2000, len(line)
+    parsed = json.loads(line)
+    assert len(parsed["slowest"]) == bench.SLOWEST < len(api.HEADLINE)
+    assert parsed["record"] == path
+    assert parsed["flagship_docs_per_sec"] == record["flagship_docs_per_sec"]

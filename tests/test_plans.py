@@ -9,6 +9,7 @@ from whitebox_tools_spark import derive
 from whitebox_tools_spark.operators import tiling
 from whitebox_tools_spark.operators.pip import EXPR_MAX_VERTICES, clip_points, tag_polygon
 from whitebox_tools_spark.operators.radius_join import radius_join
+from whitebox_tools_spark.session import HUGE_METHOD_LIMIT, huge_stages
 from whitebox_tools_spark.sources import vectors
 from whitebox_tools_spark.sources.docs import synth_docs
 from whitebox_tools_spark.sources.tables import documents
@@ -148,6 +149,71 @@ class TestPlans:
             plan = _plan(df)
             assert "BroadcastNestedLoopJoin" not in plan, plan
             assert "CartesianProduct" not in plan, plan
+
+
+def _star(n_vertices: int) -> list:
+    """One star polygon of ``n_vertices`` total vertices (closing vertex
+    included) whose edges all cross: none is horizontal, so the optimizer
+    folds none of them away."""
+    ang = np.linspace(0, 2 * np.pi, n_vertices - 1, endpoint=False) + 0.1
+    rad = np.where(np.arange(n_vertices - 1) % 2 == 0, 300.0, 150.0)
+    ring = np.stack([500 + rad * np.cos(ang), 500 + rad * np.sin(ang)], axis=1)
+    return [vectors.PolygonFeature(fid=1, rings=[np.vstack([ring, ring[:1]])], holes=[False])]
+
+
+def _flagship_shape(spark, layer, strategy="auto"):
+    """bench.py's flagship: synth docs -> geometry -> LidarTile -> tag ->
+    per-(tile, poly) aggregate."""
+    geo = derive.with_geometry(synth_docs(spark, 1000, partitions=2), "doc_num")
+    tiled = tiling.lidar_tile(geo, min_points=2, extent=None)
+    tagged = tag_polygon(tiled, layer, strategy=strategy)
+    return tagged.groupBy("tile", "poly_fid").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+class TestHugeMethods:
+    """HotSpot does not JIT-compile a method above 8000 bytes, so a fused
+    stage past that runs interpreted unless Spark's codegen limit sends it
+    per operator. These pin the limit and the stages that meet it."""
+
+    def test_session_caps_whole_stage_methods_at_hotspot_limit(self, spark):
+        limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+        assert limit == HUGE_METHOD_LIMIT <= 8000
+
+    def test_flagship_stages_compile(self, spark):
+        """auto sends rect_layer to 'expr': its fused stage must stay
+        under the limit, or the fold loses its JIT."""
+        from whitebox_tools_spark import api
+
+        assert huge_stages(api.flagship(spark)) == []
+
+    def test_layers_past_rect_layer_take_compiled_arrow_stage(self, spark):
+        """A layer just past rect_layer's 20 vertices whose edges all cross
+        makes a flagship stage past the limit on 'expr' (about 490 bytes
+        per edge), where the Arrow path is faster: auto takes the Arrow
+        path, whose stage compiles."""
+        for n in (EXPR_MAX_VERTICES + 1, 51):
+            layer = _star(n)
+            assert huge_stages(_flagship_shape(spark, layer, "expr")) != [], n
+            df = _flagship_shape(spark, layer)
+            assert "ArrowEvalPython" in _plan(df), n
+            assert huge_stages(df) == [], n
+
+    def test_docs_overlay_stage_runs_per_operator(self, spark, tmp_path):
+        """docs parquet with spans -> geometry -> LidarTile -> rect_layer
+        tag -> spans sink: the fused tag stage is past 8000 bytes, and no
+        such stage may sit at or under the session's limit, where it
+        would be kept whole-stage and run interpreted. The docs are
+        written here rather than read through ``_geo``: a geometry frame
+        that another test cached would replace the scan."""
+        path = str(tmp_path / "docs")
+        synth_docs(spark, 200).write.parquet(path)
+        geo = derive.with_geometry(spark.read.parquet(path), "doc_num")
+        tagged = tag_polygon(tiling.lidar_tile(geo, min_points=2), vectors.rect_layer())
+        df = tagged.select("doc_num", "tile", "poly_fid", "spans")
+        huge = huge_stages(df)
+        limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+        assert huge, "the docs_overlay tag stage no longer crosses 8000 bytes"
+        assert [size for _, size in huge if size <= limit] == [], (huge, limit)
 
 
 class TestRound2Plans:

@@ -111,6 +111,16 @@ def q_clip_semi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "x", "y")
 
 
+def q_clip_lidar_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ClipLidarToPolygon's rule (``shell_then_hole``) on the rectangle
+    layer. Its features are disjoint, so the rule agrees with Clip's
+    there and clip_semi's oracle holds; the overlap cases that tell the
+    two rules apart are in tests/test_pip.py."""
+    return clip_points(
+        _docs_geo(spark, sf_dir), vectors.rect_layer(), "semi", "shell_then_hole"
+    ).select("doc_id", "x", "y")
+
+
 def q_clip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clip_points(_docs_geo(spark, sf_dir), vectors.rect_layer(), "anti").select(
         "doc_id", "x", "y"
@@ -143,6 +153,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "tile_counts": q_tile_counts,
     "clip_semi": q_clip_semi,
     "clip_semi_cells": q_clip_semi_cells,
+    "clip_lidar_semi": q_clip_lidar_semi,
     "clip_anti": q_clip_anti,
     "tag_polygon": q_tag_polygon,
     "radius_join": q_radius_join,
@@ -223,6 +234,10 @@ WITH {_PTS_CTE}
 SELECT doc_id, x, y FROM pts WHERE {vectors.rect_layer_sql_predicate()}
 """,
     "clip_semi_cells": f"""
+WITH {_PTS_CTE}
+SELECT doc_id, x, y FROM pts WHERE {vectors.rect_layer_sql_predicate()}
+""",
+    "clip_lidar_semi": f"""
 WITH {_PTS_CTE}
 SELECT doc_id, x, y FROM pts WHERE {vectors.rect_layer_sql_predicate()}
 """,

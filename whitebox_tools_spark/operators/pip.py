@@ -33,10 +33,15 @@ boundary points are outside.
 Scale design — three physical strategies, same semantics:
 - 'expr' (default for layers up to EXPR_MAX_VERTICES total vertices): the
   winding-number fold is emitted as pure JVM column expressions (a
-  plain per-edge sum unrolled per ring, ``_inside_ring_col``), so the
-  whole overlay stays inside whole-stage codegen — zero Python, zero
-  Arrow transfer, a NARROW pass. On the flagship pipeline (20M synth
-  docs, 4 cores) it runs 1.7-1.9x the docs/sec of the arrow path.
+  plain per-edge sum unrolled per ring, ``_inside_ring_col``) — zero
+  Python, zero Arrow transfer, a NARROW pass. It wins only while the
+  whole-stage method that holds the fold stays under HotSpot's 8000-byte
+  JIT limit (``session.HUGE_METHOD_LIMIT``); past it ``get_spark`` runs
+  the stage per operator and the arrow path is faster. On the flagship
+  pipeline (20M synth docs, 4 cores) the 20-vertex rectangle layer's
+  stage compiles (7765 bytes) and runs 1.7-1.9x the docs/sec of the
+  arrow path; a stage that does not compile loses that lead (table at
+  EXPR_MAX_VERTICES).
 - 'arrow': a scalar pandas UDF over (x, y) with the numpy kernels — for
   layers too large to inline into the plan (the batch evaluates thousands
   of rings per point efficiently). Also narrow. Only the two coordinate
@@ -70,16 +75,33 @@ Mode = Literal["semi", "anti"]
 PartMode = Literal["last_wins", "shell_then_hole"]
 
 # layers up to this many total vertices inline into the plan ('expr').
-# Measured on local[8], 200k points: at 256 vertices the generated
-# whole-stage method still compiles (janino hard-fails with "Code grows
-# beyond 64 KB" near ~2048, and above ~512 compile time and interpreted
-# fallbacks erase the codegen win); the arrow path is flat ~0.5s at any
-# layer size because the layer is broadcast once and evaluated in
-# vectorized numpy.  Chunking the fold into intermediate projected
-# columns does NOT help: CollapseProject re-inlines single-use aliases,
-# so the generated method is just as large (measured 17.6s warm at 2048
-# vertices chunked vs 0.49s arrow).
-EXPR_MAX_VERTICES = 256
+# The fold pays only while its fused stage JIT-compiles: each crossing
+# edge adds about 490 bytes to the stage's largest method, and past 8000
+# bytes the stage runs per operator (session.HUGE_METHOD_LIMIT), where
+# the arrow path wins. Flagship shape (bench._flagship_synth, 20M synth
+# docs, noop sink), 4 cores, median of 3 warm runs, limit on:
+#
+#   layer            vertices  max method  expr s  arrow s
+#   rect_layer       20        7765        2.29    4.32
+#   1-feature star   12        6652        2.17    4.15
+#   1-feature star   14        7628        2.47    4.00
+#   1-feature star   16        8604        4.17    4.27
+#   1-feature star   18        9580        4.32    4.02
+#   1-feature star   20        10556       4.37    3.63
+#   1-feature star   26        13484       4.86    3.98
+#   1-feature star   35        17684       6.01    4.18
+#   1-feature star   51        25492       7.27    3.80
+#
+# (Without the limit the 20-vertex star's expr stage runs interpreted:
+# 23.18 s against 4.09 s arrow.) The star crossover, where every edge
+# crosses, is 14-16 vertices; rect_layer's horizontal edges fold away,
+# so its 20 vertices compile. The threshold sits at rect_layer's 20 so
+# that every catalog PIP, paint, clip and zonal row stays on 'expr';
+# it is a vertex count, so a 16-20-vertex layer whose edges all cross
+# takes 'expr' past the limit. Chunking the fold into intermediate
+# projected columns does NOT shrink the method: CollapseProject
+# re-inlines single-use aliases.
+EXPR_MAX_VERTICES = 20
 
 STRATEGIES = ("auto", "expr", "arrow", "cells")
 
