@@ -1,66 +1,65 @@
 """Point-in-polygon overlay joins (Clip / Erase / ClipLidarToPolygon family).
 
-Parity contracts, (op, part_mode) -> the reference tool's rule:
+Parity contract: every tag and clip is ONE fold over records, in (record,
+ring) order. A record has a bbox, shell rings and hole rings. For each
+record whose bbox holds the point (the reference's ``is_point_in_box``):
+if one of its holes holds the point, the tag is cleared (null) or left as
+it was; else if one of its shells does, the tag becomes the record's fid;
+else the tag does not change. A clip keeps the points whose tag is set
+(semi) or not set (anti). The reference tool fixes the record and the
+hole effect (``_rule`` is the only code that knows this table):
 
-  op, part_mode                    reference rule
-  -------------------------------  ---------------------------------------
-  tag_polygon, last_wins           Clip point mode (gis_analysis/clip.rs:
-                                   292-340): all parts of the layer in
-                                   (record, ring) order, bbox pre-test; the
-                                   LAST ring hit decides: its fid, or null
-                                   if it is a hole.
-  clip_points, last_wins           Clip point mode: inside iff the
-                                   last_wins tag is not null.
-  tag_polygon, shell_then_hole     VectorPolygonsToRaster (data_tools/
-                                   vector_polygons_to_raster.rs:386-560):
-                                   fid of the LAST record whose shells hold
-                                   the point and whose own holes do not.
-  raster.polygons_to_raster,       VectorPolygonsToRaster /
-  raster.clip_raster_to_polygon    ClipRasterToPolygon: the shell_then_hole
-                                   tag over cell centres (painted value;
-                                   clip keeps not null, erase keeps null).
-  clip_points, shell_then_hole     ClipLidarToPolygon (lidar_analysis/
-                                   clip_lidar_to_polygon.rs:264-310): per
-                                   record, shells first (any hit ->
-                                   inside), then holes (any hit ->
-                                   outside); the LAST record with any ring
-                                   hit decides, so a later record's hole
-                                   can clear an earlier record's shell.
+  reference tool (call, part_mode)      record                a hole hit
+  ------------------------------------  --------------------  ------------
+  Clip point mode (tag_polygon and      each ring, with its   clears the
+  clip_points, last_wins)               feature's bbox        tag
+  ClipLidarToPolygon (clip_points,      the feature           clears the
+  shell_then_hole)                                            tag
+  VectorPolygonsToRaster (tag_polygon,  the feature           leaves the
+  shell_then_hole; raster paint, clip                         earlier tag
+  and erase)
+
+Sources: gis_analysis/clip.rs:292-340 (the last ring hit decides: its
+fid, or null if it is a hole); lidar_analysis/clip_lidar_to_polygon.rs:
+264-310 (the last record with any ring hit decides, so a later record's
+hole clears an earlier record's shell); data_tools/
+vector_polygons_to_raster.rs:386-560 (the last record whose shells hold
+the point and whose own holes do not).
 
 The PIP kernel itself is the even-odd winding of kernels/geometry.py;
 boundary points are outside.
 
-Scale design — three physical strategies, same semantics:
+Scale design — three physical strategies of the same fold:
 - 'expr' (default for layers up to EXPR_MAX_VERTICES total vertices): the
-  winding-number fold is emitted as pure JVM column expressions (a
-  plain per-edge sum unrolled per ring, ``_inside_ring_col``) — zero
-  Python, zero Arrow transfer, a NARROW pass. It wins only while the
-  whole-stage method that holds the fold stays under HotSpot's 8000-byte
-  JIT limit (``session.HUGE_METHOD_LIMIT``); past it ``get_spark`` runs
-  the stage per operator and the arrow path is faster. On the flagship
-  pipeline (20M synth docs, 4 cores) the 20-vertex rectangle layer's
-  stage compiles (7765 bytes) and runs 1.7-1.9x the docs/sec of the
-  arrow path; a stage that does not compile loses that lead (table at
+  fold is emitted as pure JVM column expressions, one ``CASE WHEN`` per
+  record around a plain per-edge winding sum unrolled per ring
+  (``_inside_ring_col``) — zero Python, zero Arrow transfer, a NARROW
+  pass. It wins only while the whole-stage method that holds the fold
+  stays under HotSpot's 8000-byte JIT limit
+  (``session.HUGE_METHOD_LIMIT``); past it ``get_spark`` runs the stage
+  per operator and the arrow path is faster. On the flagship pipeline
+  (20M synth docs, 4 cores) the 20-vertex rectangle layer's stage
+  compiles (7765 bytes) and runs 1.7-1.9x the docs/sec of the arrow
+  path; a stage that does not compile loses that lead (table at
   EXPR_MAX_VERTICES).
-- 'arrow': a scalar pandas UDF over (x, y) with the numpy kernels — for
+- 'arrow': the fold in numpy, in a scalar pandas UDF over (x, y) — for
   layers too large to inline into the plan (the batch evaluates thousands
   of rings per point efficiently). Also narrow. Only the two coordinate
   columns cross the Arrow boundary (Spark's ``ArrowEvalPython`` zips the
   result back onto the rows it buffers in the JVM), and the UDF is
   transparent to column pruning, so a projection above it reaches the
   parquet scan.
-Both replicate the reference's per-feature bbox pre-test
-(``is_point_in_box``) before the exact winding evaluation.
-
 - 'cells' (operators/pip_cells.py): the huge-layer path — the layer is
-  never broadcast; membership is two hash equi-joins (bbox cells, then
-  banded winding edges) with a bit-identical integer winding sum. Pick it
-  explicitly when the layer will not fit in executor memory.
+  never broadcast; the ring hits come from two hash equi-joins (bbox
+  cells, then banded winding edges) with a bit-identical integer winding
+  sum, and the fold is a per-record aggregate and a max over record
+  order. Pick it explicitly when the layer will not fit in executor
+  memory.
 """
 
 from __future__ import annotations
 
-from typing import Literal
+from typing import Literal, get_args
 
 import numpy as np
 import pandas as pd
@@ -105,8 +104,29 @@ EXPR_MAX_VERTICES = 20
 
 STRATEGIES = ("auto", "expr", "arrow", "cells")
 
-# the tag column a last_wins clip filters on
+# the tag column a clip filters on
 _TAG = "_pip_tag"
+
+
+def _rule(op: str, part_mode: str) -> tuple[str, bool]:
+    """(record unit, whether a hole hit clears the tag) for ``op`` ('tag'
+    or 'clip') under ``part_mode``: the module table, and the one place
+    that knows it."""
+    if part_mode not in get_args(PartMode):
+        raise ValueError(
+            f"unknown part_mode {part_mode!r}; expected one of {', '.join(get_args(PartMode))}"
+        )
+    if part_mode == "last_wins":
+        return "ring", True
+    return "feature", op == "clip"
+
+
+def _records(layer: list[PolygonFeature], unit: str):
+    """(fid, bbox, shell rings, hole rings) per record, in fold order."""
+    for feat in layer:
+        bbox, parts = feat.bbox, list(zip(feat.rings, feat.holes))
+        for rec in [[p] for p in parts] if unit == "ring" else [parts]:
+            yield feat.fid, bbox, [r for r, h in rec if not h], [r for r, h in rec if h]
 
 
 # --------------------------------------------------- JVM expression path
@@ -139,81 +159,76 @@ def _inside_ring_col(x: F.Column, y: F.Column, ring: np.ndarray) -> F.Column:
     return F.pmod(wn, F.lit(2)) != 0
 
 
-def _bbox_col(x: F.Column, y: F.Column, feat: PolygonFeature) -> F.Column:
-    xmin, ymin, xmax, ymax = feat.bbox
-    return (
-        (x >= F.lit(xmin)) & (x <= F.lit(xmax)) & (y >= F.lit(ymin)) & (y <= F.lit(ymax))
-    )
+def _any_ring_col(x: F.Column, y: F.Column, rings: list[np.ndarray]) -> F.Column | None:
+    hit = None
+    for ring in rings:
+        inside = _inside_ring_col(x, y, ring)
+        hit = inside if hit is None else hit | inside
+    return hit
 
 
-def membership_col(layer: list[PolygonFeature], x: F.Column, y: F.Column) -> F.Column:
-    """ClipLidarToPolygon membership as a boolean column; ``_membership``
-    is its numpy twin."""
-    state = F.lit(False)
-    for feat in layer:
-        bb = _bbox_col(x, y, feat)
-        shell = F.lit(False)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if not hole:
-                shell = shell | _inside_ring_col(x, y, ring)
-        hole_hit = F.lit(False)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if hole:
-                hole_hit = hole_hit | _inside_ring_col(x, y, ring)
-        state = F.when(bb & hole_hit, F.lit(False)).when(bb & shell, F.lit(True)).otherwise(
-            state
-        )
-    return state
-
-
-def fid_col(
-    layer: list[PolygonFeature],
-    x: F.Column,
-    y: F.Column,
-    part_mode: PartMode = "last_wins",
+def _tag_col(
+    layer: list[PolygonFeature], x: F.Column, y: F.Column, unit: str, clears: bool
 ) -> F.Column:
-    """Tagging feature fid column (null if none); rules in ``tag_polygon``."""
-    state = F.lit(None).cast("long")
-    for feat in layer:
-        fid = F.lit(feat.fid).cast("long")
-        if part_mode == "shell_then_hole":
-            state = F.when(membership_col([feat], x, y), fid).otherwise(state)
-            continue
-        bb = _bbox_col(x, y, feat)
-        for ring, hole in zip(feat.rings, feat.holes):
-            val = F.lit(None).cast("long") if hole else fid
-            state = F.when(bb & _inside_ring_col(x, y, ring), val).otherwise(state)
+    """The fold as one column expression (null if no tag). A record emits
+    no branch for a shell or hole half it does not have, and reads
+    ``state`` once, so the tree grows linearly with the records."""
+    null = F.lit(None).cast("long")
+    state = null
+    for fid, (xmin, ymin, xmax, ymax), shells, holes in _records(layer, unit):
+        bb = (x >= F.lit(xmin)) & (x <= F.lit(xmax)) & (y >= F.lit(ymin)) & (y <= F.lit(ymax))
+        shell, hole = _any_ring_col(x, y, shells), _any_ring_col(x, y, holes)
+        if not clears:
+            # a hole hit leaves the tag: one branch, one read of ``state``
+            shell, hole = shell if shell is None or hole is None else shell & ~hole, None
+        case = None
+        for hit, v in ((hole, null), (shell, F.lit(fid).cast("long"))):
+            if hit is not None:
+                case = F.when(bb & hit, v) if case is None else case.when(bb & hit, v)
+        if case is not None:
+            state = case.otherwise(state)
     return state
+
+
+# --------------------------------------------------------- numpy path
+
+
+def _any_ring(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
+    hit = np.zeros(len(px), dtype=bool)
+    for ring in rings:
+        hit |= point_in_poly(px, py, ring)
+    return hit
+
+
+def _tag_np(
+    px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature], unit: str, clears: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """The fold in numpy: (fid, tagged) per point. ``tagged`` is a mask,
+    not a fid sentinel, so every fid value is a tag."""
+    fid = np.zeros(len(px), dtype=np.int64)
+    tagged = np.zeros(len(px), dtype=bool)
+    for rec_fid, (xmin, ymin, xmax, ymax), shells, holes in _records(layer, unit):
+        idx = np.nonzero((px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax))[0]
+        if not len(idx):
+            continue
+        qx, qy = px[idx], py[idx]
+        hole = _any_ring(qx, qy, holes)
+        if clears:
+            tagged[idx[hole]] = False
+        hit = idx[_any_ring(qx, qy, shells) & ~hole]
+        fid[hit] = rec_fid
+        tagged[hit] = True
+    return fid, tagged
+
+
+def _coords(px: pd.Series, py: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    # a null coordinate arrives as NaN: every comparison is False, so the
+    # point is in no polygon, as on the expr path
+    return px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64)
 
 
 def _layer_vertices(layer: list[PolygonFeature]) -> int:
     return sum(len(r) for f in layer for r in f.rings)
-
-
-def _membership(px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature]) -> np.ndarray:
-    """ClipLidarToPolygon membership per point: per feature record, shells
-    tested first (any hit -> true), then holes (any hit -> false,
-    overriding the shell verdict). The membership flag persists ACROSS
-    records in the reference (it is initialized once per point,
-    clip_lidar_to_polygon.rs:269), so a later record's verdict overwrites
-    an earlier one's wherever it hits."""
-    inside = np.zeros(len(px), dtype=bool)
-    for feat in layer:
-        xmin, ymin, xmax, ymax = feat.bbox
-        in_bb = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-        if not in_bb.any():
-            continue
-        idx = np.nonzero(in_bb)[0]
-        shell_hit = np.zeros(len(idx), dtype=bool)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if not hole:
-                shell_hit |= point_in_poly(px[idx], py[idx], ring)
-        hole_hit = np.zeros(len(idx), dtype=bool)
-        for ring, hole in zip(feat.rings, feat.holes):
-            if hole:
-                hole_hit |= point_in_poly(px[idx], py[idx], ring)
-        inside[idx] = np.where(hole_hit, False, np.where(shell_hit, True, inside[idx]))
-    return inside
 
 
 def _strategy(strategy: str, layer: list[PolygonFeature]) -> str:
@@ -226,30 +241,34 @@ def _strategy(strategy: str, layer: list[PolygonFeature]) -> str:
     return strategy
 
 
-def _fids(
-    px: np.ndarray, py: np.ndarray, layer: list[PolygonFeature], part_mode: PartMode
-) -> np.ndarray:
-    """Tag fid per point, -1 if none (``fid_col`` in numpy)."""
-    fid = np.full(len(px), -1, dtype=np.int64)
-    for feat in layer:
-        xmin, ymin, xmax, ymax = feat.bbox
-        in_bb = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-        if not in_bb.any():
-            continue
-        idx = np.nonzero(in_bb)[0]
-        if part_mode == "last_wins":
-            for ring, hole in zip(feat.rings, feat.holes):
-                hit = point_in_poly(px[idx], py[idx], ring)
-                fid[idx[hit]] = -1 if hole else feat.fid
-        else:
-            fid[idx[_membership(px[idx], py[idx], [feat])]] = feat.fid
-    return fid
+def _tag(
+    points: DataFrame,
+    layer: list[PolygonFeature],
+    op: str,
+    part_mode: str,
+    x: str,
+    y: str,
+    out: str,
+    strategy: str,
+) -> DataFrame:
+    """``points`` plus the fold's tag in ``out``, for ``op`` under
+    ``part_mode`` on the chosen strategy."""
+    unit, clears = _rule(op, part_mode)
+    strategy = _strategy(strategy, layer)
+    if strategy == "cells":
+        from whitebox_tools_spark.operators.pip_cells import tag_polygon_cells
 
+        return tag_polygon_cells(points, layer, unit, clears, x, y, out)
+    if strategy == "expr":
+        return points.withColumn(out, _tag_col(layer, F.col(x), F.col(y), unit, clears))
+    bc = points.sparkSession.sparkContext.broadcast(layer)
 
-def _coords(px: pd.Series, py: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    # a null coordinate arrives as NaN: every comparison is False, so the
-    # point is in no polygon, as on the expr path
-    return px.to_numpy(dtype=np.float64), py.to_numpy(dtype=np.float64)
+    @F.pandas_udf(T.LongType())
+    def fid_of(px: pd.Series, py: pd.Series) -> pd.Series:
+        fid, tagged = _tag_np(*_coords(px, py), bc.value, unit, clears)
+        return pd.Series(pd.arrays.IntegerArray(fid, ~tagged))
+
+    return points.withColumn(out, fid_of(F.col(x), F.col(y)))
 
 
 def clip_points(
@@ -261,30 +280,11 @@ def clip_points(
     y: str = "y",
     strategy: str = "auto",
 ) -> DataFrame:
-    """Spatial semi/anti join of a point table against a broadcast layer.
-
-    Under ``last_wins`` a point is inside iff its ``tag_polygon`` tag is
-    set; ``shell_then_hole`` is ClipLidarToPolygon's own membership rule."""
-    if part_mode == "last_wins":
-        tagged = tag_polygon(points, layer, part_mode, x, y, _TAG, strategy)
-        m = F.col(_TAG).isNotNull()
-        return tagged.where(m if mode == "semi" else ~m).drop(_TAG)
-    strategy = _strategy(strategy, layer)
-    if strategy == "cells":
-        from whitebox_tools_spark.operators.pip_cells import clip_points_cells
-
-        return clip_points_cells(points, layer, mode, x, y)
-    if strategy == "expr":
-        m = membership_col(layer, F.col(x), F.col(y))
-    else:
-        bc = points.sparkSession.sparkContext.broadcast(layer)
-
-        @F.pandas_udf(T.BooleanType())
-        def inside(px: pd.Series, py: pd.Series) -> pd.Series:
-            return pd.Series(_membership(*_coords(px, py), bc.value))
-
-        m = inside(F.col(x), F.col(y))
-    return points.where(m if mode == "semi" else ~m)
+    """Spatial semi/anti join of a point table against a broadcast layer:
+    the points whose clip tag (module table) is set, resp. not set."""
+    inside = F.col(_TAG).isNotNull()
+    tagged = _tag(points, layer, "clip", part_mode, x, y, _TAG, strategy)
+    return tagged.where(inside if mode == "semi" else ~inside).drop(_TAG)
 
 
 def tag_polygon(
@@ -299,29 +299,16 @@ def tag_polygon(
     """Adds the fid of the feature that tags each point, null if none.
 
     This is the join form of the overlay (what Intersect point-mode needs
-    to merge attributes). The rule per part_mode (module table):
+    to merge attributes). The tag is the module's one fold; the call and
+    part_mode set its record and what a hole hit does:
 
-      part_mode        tag (reference tool)                 read by
-      ---------------  -----------------------------------  -----------------
-      last_wins        fid of the last ring hit in          clip_points
-                       (record, ring) order, null if that   (last_wins):
-                       ring is a hole (Clip)                tag is not null
-      shell_then_hole  fid of the last record whose shells  raster paint,
-                       hold the point and whose own holes   clip and erase
-                       do not (VectorPolygonsToRaster)
+      call, part_mode               record     a hole hit    reference tool
+      ----------------------------  ---------  ------------  --------------
+      tag_polygon / clip_points,    each ring  clears        Clip
+      last_wins
+      clip_points, shell_then_hole  feature    clears        ClipLidarTo-
+                                                             Polygon
+      tag_polygon, shell_then_hole  feature    leaves the    VectorPolygons-
+                                               earlier tag   ToRaster
     """
-    strategy = _strategy(strategy, layer)
-    if strategy == "cells":
-        from whitebox_tools_spark.operators.pip_cells import tag_polygon_cells
-
-        return tag_polygon_cells(points, layer, part_mode, x, y, out)
-    if strategy == "expr":
-        return points.withColumn(out, fid_col(layer, F.col(x), F.col(y), part_mode))
-    bc = points.sparkSession.sparkContext.broadcast(layer)
-
-    @F.pandas_udf(T.LongType())
-    def fid_of(px: pd.Series, py: pd.Series) -> pd.Series:
-        fid = _fids(*_coords(px, py), bc.value, part_mode)
-        return pd.Series(pd.arrays.IntegerArray(fid, fid < 0))
-
-    return points.withColumn(out, fid_of(F.col(x), F.col(y)))
+    return _tag(points, layer, "tag", part_mode, x, y, out, strategy)

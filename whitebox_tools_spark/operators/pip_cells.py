@@ -4,9 +4,11 @@ The 'expr' and 'arrow' strategies in operators/pip.py both broadcast the
 whole polygon layer (inlined into the plan / sc.broadcast).  That is the
 right call while the layer fits in executor memory; a country-scale
 parcel layer (10^8+ vertices) does not.  This module evaluates the SAME
-rules (the two tags and ClipLidarToPolygon membership tabled in
-operators/pip.py; winding kernel poly_ops.rs:21-72) as two hash
-equi-joins, never materializing the layer on any single node:
+fold (the one per-record rule tabled in operators/pip.py; winding kernel
+poly_ops.rs:21-72) without materializing the layer on any single node:
+two hash equi-joins find the rings that hold each point, then
+``_per_record`` folds them into records and a max over record order picks
+the tag:
 
 1. bbox candidate join — feature bboxes are exploded to covering grid
    cells (cell edge ~ median feature bbox side, so ~4 cells/feature);
@@ -24,7 +26,7 @@ equi-joins, never materializing the layer on any single node:
 
 Both joins are plain equi-joins on well-distributed long keys (AQE
 handles hot cells); the per-pair work is a codegen-able projection and
-two partial aggregations.  Layer-side prep here starts from the
+three partial aggregations.  Layer-side prep here starts from the
 driver-resident feature list (the catalog's layers are small); for a
 layer that itself lives in a DataFrame the same explode runs as a
 distributed select — the join topology is unchanged.
@@ -35,8 +37,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.cells import pack_cell
@@ -129,85 +130,41 @@ def _ring_hits(
     up = (F.col("ay") <= F.col("py")) & (F.col("by") > F.col("py")) & (il > 0.0)
     dn = (F.col("ay") > F.col("py")) & (F.col("by") <= F.col("py")) & (il < 0.0)
     term = F.when(up, 1).when(dn, -1).otherwise(0)
+    # ``hole`` is fixed per ring, so it is no grouping key: a ring record
+    # (last_wins) then groups on the same keys again, with no exchange
     wn = (
-        j.groupBy(_PID, "o", "fid", "ring_idx", "hole")
-        .agg(F.sum(term).alias("wn"))
+        j.groupBy(_PID, "o", "fid", "ring_idx")
+        .agg(F.sum(term).alias("wn"), F.max("hole").alias("hole"))
         .where(F.pmod(F.col("wn"), F.lit(2)) != 0)
         .select(_PID, "o", "fid", "ring_idx", "hole")
     )
     return pts, wn
 
 
-def _per_record(wn: DataFrame) -> DataFrame:
-    """(_pid, o, fid, held) per record with any ring hit; ``held``: the
-    record's shells hold the point and its own holes do not."""
-    return wn.groupBy(_PID, "o", "fid").agg(
-        (
-            (F.max(F.when(~F.col("hole"), 1).otherwise(0)) == 1)
-            & (F.max(F.when(F.col("hole"), 1).otherwise(0)) == 0)
-        ).alias("held")
-    )
-
-
-def membership_cells(
-    points: DataFrame,
-    layer: list[PolygonFeature],
-    x: str = "x",
-    y: str = "y",
-) -> tuple[DataFrame, DataFrame]:
-    """(points_with_pid, (_pid, inside) for pids with at least one hit):
-    ClipLidarToPolygon membership, the last record with any hit decides."""
-    pts, wn = _ring_hits(points, layer, x, y)
-    st = (
-        _per_record(wn)
-        .groupBy(_PID)
-        .agg(F.max(F.struct("o", "held")).alias("m"))
-        .select(_PID, F.col("m.held").alias("inside"))
-    )
-    return pts, st
-
-
-def clip_points_cells(
-    points: DataFrame,
-    layer: list[PolygonFeature],
-    mode: str = "semi",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    pts, st = membership_cells(points, layer, x, y)
-    joined = pts.join(st, _PID, "left").withColumn(
-        "inside", F.coalesce("inside", F.lit(False))
-    )
-    keep = F.col("inside") if mode == "semi" else ~F.col("inside")
-    return joined.where(keep).drop(_PID, "inside")
+def _per_record(wn: DataFrame, rec: list[str]) -> DataFrame:
+    """(_pid, *rec, fid, hole) per record with any ring hit, ``rec`` the
+    record's key columns; ``hole``: one of its holes holds the point (if
+    not, one of its shells does)."""
+    return wn.groupBy(_PID, *rec, "fid").agg(F.max("hole").alias("hole"))
 
 
 def tag_polygon_cells(
     points: DataFrame,
     layer: list[PolygonFeature],
-    part_mode: str = "last_wins",
+    unit: str,
+    clears: bool,
     x: str = "x",
     y: str = "y",
     out: str = "poly_fid",
 ) -> DataFrame:
+    """``points`` plus the fold's tag in ``out``; ``unit`` and ``clears``
+    come from ``pip._rule``. A record whose hole is hit leaves the tag
+    unless ``clears``, so it drops out before the max."""
     pts, wn = _ring_hits(points, layer, x, y)
-    if part_mode == "last_wins":
-        st = wn.groupBy(_PID).agg(
-            F.max(
-                F.struct(
-                    F.col("o"),
-                    F.col("ring_idx"),
-                    F.when(F.col("hole"), F.lit(None).cast("long"))
-                    .otherwise(F.col("fid"))
-                    .alias("v"),
-                )
-            ).alias("m")
-        )
-    else:
-        st = (
-            _per_record(wn)
-            .where("held")
-            .groupBy(_PID)
-            .agg(F.max(F.struct(F.col("o"), F.col("fid").alias("v"))).alias("m"))
-        )
+    rec = ["o", "ring_idx"] if unit == "ring" else ["o"]
+    hits = _per_record(wn, rec)
+    if not clears:
+        hits = hits.where(~F.col("hole"))
+    v = F.when(F.col("hole"), F.lit(None).cast("long")).otherwise(F.col("fid"))
+    st = hits.groupBy(_PID).agg(F.max(F.struct(*rec, v.alias("v"))).alias("m"))
     return pts.join(st.select(_PID, F.col("m.v").alias(out)), _PID, "left").drop(_PID)

@@ -188,8 +188,11 @@ def clip_raster_to_polygon(
 ) -> DataFrame:
     """ClipRasterToPolygon / ErasePolygonFromRaster: drop the cells whose
     center falls outside (resp. inside) the layer; holes honoured
-    (clip_raster_to_polygon.rs:236-300). Inside = a set ``tag_polygon``
-    shell_then_hole tag."""
+    (clip_raster_to_polygon.rs:236-300). Inside = the centre's
+    ``tag_polygon(..., "shell_then_hole")`` tag is set: pip's one fold
+    over feature records, where a hole hit leaves the earlier tag, so a
+    centre in one record's hole stays inside if an earlier record holds
+    it (the paint rule)."""
     x, y = center_cols(cfg)
     cells = raster.withColumns({"_cx": x, "_cy": y})
     cells = tag_polygon(cells, layer, "shell_then_hole", "_cx", "_cy", "_tag")
