@@ -211,6 +211,9 @@ def test_unknown_strategy_is_rejected(spark):
             clip_points(df, rect_layer(), "semi", "shell_then_holes", strategy=strategy)
         with pytest.raises(ValueError, match="last_wins, shell_then_hole"):
             tag_polygon(df, rect_layer(), "lastwins", strategy=strategy)
+        for mode in ("Semi", "semi ", "inside"):
+            with pytest.raises(ValueError, match="semi, anti"):
+                clip_points(df, rect_layer(), mode, strategy=strategy)
 
 
 def test_expr_and_arrow_strategies_agree(spark):

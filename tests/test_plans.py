@@ -117,6 +117,30 @@ class TestPlans:
         assert "CartesianProduct" not in plan
         assert "Generate explode" in plan or "Generate" in plan  # 5x5 neighbour explode
 
+    def test_knn_and_idw_are_lazy_jvm_plans(self, spark):
+        """knn_join and idw_grid (whose fallback is a knn_join) are one
+        lazy plan each: building them runs no Spark job, and the plan has
+        no Python node and no product join."""
+        from whitebox_tools_spark.operators.gridding import GridConfig, idw_grid
+        from whitebox_tools_spark.operators.radius_join import knn_join
+
+        geo = _geo(spark)
+        pts = geo.select(F.col("doc_id").alias("pid"), "x", "y", "z")
+        qs = geo.select(F.col("doc_id").alias("qid"), "x", "y")
+        cfg = GridConfig(rows=20, cols=20, north=1000.0, west=0.0, res_x=50.0, res_y=50.0)
+        sc, group = spark.sparkContext, "knn-idw-build"
+        sc.setJobGroup(group, "build knn_join and idw_grid")
+        try:
+            frames = (knn_join(pts, qs, 4, 25.0), idw_grid(pts, cfg, radius=25.0))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        for df in frames:
+            plan = _plan(df)
+            for node in ("ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
+                         "BroadcastNestedLoopJoin"):
+                assert node not in plan, (node, plan)
+
     def test_projection_pushdown_reaches_scan(self, spark):
         """Column pruning: a 2-column projection must not read the whole
         documents schema."""

@@ -70,13 +70,10 @@ def test_radius_join_parity_random(spark):
     assert len(expect) > 50  # fixture dense enough to be meaningful
 
 
-def test_knn_join_parity_random(spark):
-    n_pts, n_q, k, radius = 200, 25, 5, 30.0
-    ids = np.arange(n_pts)
-    px, py = derive.np_coord(ids, "x"), derive.np_coord(ids, "y")
-    qids = np.arange(n_q) + 50_000
-    qx, qy = derive.np_coord(qids, "x"), derive.np_coord(qids, "y")
-
+def _assert_knn_parity(spark, px, py, qx, qy, k, radius):
+    """Every query's knn_join neighbours equal frs_knn_search's."""
+    ids = np.arange(len(px))
+    qids = np.arange(len(qx)) + 50_000
     pts = spark.createDataFrame(
         [(int(i), float(a), float(b)) for i, a, b in zip(ids, px, py)],
         "pid long, x double, y double",
@@ -94,7 +91,84 @@ def test_knn_join_parity_random(spark):
     for qi, qqx, qqy in zip(qids, qx, qy):
         expect = frs_knn_search(px, py, ids, qqx, qqy, k, radius)
         exp = sorted((int(v), round(d, 9)) for v, d in expect)
-        assert sorted(by_q.get(int(qi), [])) == exp, int(qi)
+        assert sorted(by_q.get(int(qi), [])) == exp, (int(qi), k)
+
+
+def test_knn_join_parity_random(spark):
+    """Parity with the FRS oracle on the derived cloud, on negative
+    coordinates, on queries up to 50x the point spread away (many shells
+    out), and for k from 1 to above the point count."""
+    n_pts, n_q = 200, 25
+    ids = np.arange(n_pts)
+    qids = np.arange(n_q) + 50_000
+    _assert_knn_parity(
+        spark,
+        derive.np_coord(ids, "x"), derive.np_coord(ids, "y"),
+        derive.np_coord(qids, "x"), derive.np_coord(qids, "y"),
+        k=5, radius=30.0,
+    )
+
+    rng = np.random.default_rng(9)
+    px, py = rng.uniform(-900.0, -100.0, 150), rng.uniform(-400.0, 300.0, 150)
+    qx, qy = rng.uniform(-950.0, -50.0, 20), rng.uniform(-450.0, 350.0, 20)
+    _assert_knn_parity(spark, px, py, qx, qy, k=6, radius=40.0)
+
+    px, py = rng.uniform(0.0, 50.0, 40), rng.uniform(0.0, 50.0, 40)
+    ang = rng.uniform(0.0, 2 * np.pi, 20)
+    far = rng.uniform(1.0, 50.0, 20) * 50.0
+    _assert_knn_parity(
+        spark, px, py, 25.0 + far * np.cos(ang), 25.0 + far * np.sin(ang), k=3, radius=4.0
+    )
+
+    px, py = rng.uniform(-30.0, 30.0, 12), rng.uniform(-30.0, 30.0, 12)
+    qx, qy = rng.uniform(-60.0, 60.0, 10), rng.uniform(-60.0, 60.0, 10)
+    for k in (1, 4, 12, 17):
+        _assert_knn_parity(spark, px, py, qx, qy, k=k, radius=5.0)
+
+
+def test_knn_far_query_keeps_the_shell_stop(spark):
+    """A query far from every point stops at the first shell that holds
+    k points, as frs_knn_search does, even when a point one shell further
+    out is nearer: pid 1 (shell 10) at 14.1421, not pid 2 (shell 11) at
+    13.6015."""
+    pts = spark.createDataFrame(
+        [(1, -9.5, -9.5), (2, -10.5, -7.5)], "pid long, x double, y double"
+    )
+    q = spark.createDataFrame([(0, 0.5, 0.5)], "qid long, x double, y double")
+    got = knn_join(pts, q, k=1, radius=2.0).select("pid_p", "dist").collect()
+    assert [(r["pid_p"], round(r["dist"], 4)) for r in got] == [(1, 14.1421)]
+    px, py = np.array([-9.5, -10.5]), np.array([-9.5, -7.5])
+    assert frs_knn_search(px, py, np.array([1, 2]), 0.5, 0.5, 1, 2.0)[0][0] == 1
+
+
+def test_knn_join_rejects_k_below_one(spark, frs_points):
+    q = spark.createDataFrame([(0, 40.5, 31.5)], "qid long, x double, y double")
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="k >= 1"):
+            knn_join(frs_points, q, k=k, radius=0.75)
+
+
+def test_idw_grid_min_points_below_one_has_no_fallback(spark):
+    """min_points < 1 runs no kNN fallback: the cells no point is within
+    radius of stay null, and the others keep their radius IDW value."""
+    from whitebox_tools_spark.operators.gridding import GridConfig, idw_grid
+
+    cfg = GridConfig(rows=6, cols=6, north=60.0, west=0.0, res_x=10.0, res_y=10.0)
+    pts = spark.createDataFrame(
+        [(1, 12.0, 48.0, 3.0), (2, 15.0, 41.0, 5.0), (3, 44.0, 17.0, 7.0)],
+        "pid long, x double, y double, z double",
+    )
+    fill = {r["cell"]: r["value"] for r in idw_grid(pts, cfg, radius=8.0).collect()}
+    for min_points in (0, -2):
+        got = {
+            r["cell"]: r["value"]
+            for r in idw_grid(pts, cfg, radius=8.0, min_points=min_points).collect()
+        }
+        assert got.keys() == fill.keys()
+        reached = {c for c, v in got.items() if v is not None}
+        assert 0 < len(reached) < len(got)
+        assert all(fill[c] is not None for c in got)  # min_points=1 fills all
+        assert {c: got[c] for c in reached} == {c: fill[c] for c in reached}
 
 
 def test_knn_k_exceeds_population(spark, frs_points):
@@ -149,76 +223,3 @@ class TestSalting:
         )
         assert salted.exceptAll(plain).count() == 0
         assert plain.exceptAll(salted).count() == 0
-
-
-def test_knn_join_loop_fallback_via_histogram_guard(spark):
-    """max_hist_cells below the occupancy must route to the loop strategy
-    (single-scan LIMIT sentinel, VERDICT r3 item 5) and still return the
-    same neighbours as the stats path."""
-    n_pts, n_q, k, radius = 120, 10, 4, 30.0
-    ids = np.arange(n_pts)
-    px, py = derive.np_coord(ids, "x"), derive.np_coord(ids, "y")
-    qids = np.arange(n_q) + 70_000
-    qx, qy = derive.np_coord(qids, "x"), derive.np_coord(qids, "y")
-    pts = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, a, b in zip(ids, px, py)],
-        "pid long, x double, y double",
-    )
-    qs = spark.createDataFrame(
-        [(int(i), float(a), float(b)) for i, a, b in zip(qids, qx, qy)],
-        "qid long, x double, y double",
-    )
-    stats = knn_join(pts, qs, k=k, radius=radius).select(
-        "qid", "pid_p", "dist").collect()
-    looped = knn_join(pts, qs, k=k, radius=radius, max_hist_cells=1).select(
-        "qid", "pid_p", "dist").collect()
-    canon = lambda rows: sorted(
-        (r["qid"], r["pid_p"], round(r["dist"], 9)) for r in rows)
-    assert canon(looped) == canon(stats)
-
-
-def test_cell_histogram_sentinel():
-    from whitebox_tools_spark.operators.radius_join import _cell_histogram
-    from pyspark.sql import SparkSession
-    spark = SparkSession.getActiveSession()
-    pts = spark.createDataFrame(
-        [(float(i * 100), 0.0) for i in range(8)], "x double, y double")
-    # 8 points in 8 distinct cells at radius 30
-    assert _cell_histogram(pts, 30.0, "x", "y", max_cells=4) is None
-    h = _cell_histogram(pts, 30.0, "x", "y", max_cells=100)
-    assert sum(h.values()) == 8 and len(h) == 8
-
-
-def test_knn_loop_reaches_far_queries(spark):
-    """A query far outside the point extent must still find its k
-    nearest in the loop strategy (shells are bounded by the COMBINED
-    point+query extent, not the point extent alone)."""
-    from whitebox_tools_spark.operators.radius_join import knn_join
-
-    pts = spark.createDataFrame(
-        [(float(i), float(i % 3)) for i in range(8)], "x double, y double")
-    far_q = spark.createDataFrame([(1, 500.0, 500.0)],
-                                  "qid long, x double, y double")
-    out = knn_join(pts, far_q, k=2, radius=2.0, strategy="loop").toPandas()
-    assert len(out) == 2
-    assert set(out["knn_rank"]) == {1, 2}
-
-
-def test_knn_loop_fallback_cap(spark):
-    """The loop strategy's never-filled-query fallback is a remaining ×
-    points product; above max_fallback_pairs it must raise with a clear
-    message instead of silently going quadratic (ADVICE r4 #4)."""
-    import pytest as _pytest
-    from whitebox_tools_spark.operators.radius_join import knn_join
-
-    pts = spark.createDataFrame(
-        [(float(i), float(i % 3)) for i in range(8)], "x double, y double")
-    far_q = spark.createDataFrame([(1, 500.0, 500.0), (2, 600.0, 610.0)],
-                                  "qid long, x double, y double")
-    with _pytest.raises(ValueError, match="max_fallback_pairs"):
-        knn_join(pts, far_q, k=2, radius=2.0, strategy="loop",
-                 max_fallback_pairs=8).count()
-    # generous cap still succeeds
-    out = knn_join(pts, far_q, k=2, radius=2.0, strategy="loop",
-                   max_fallback_pairs=100).toPandas()
-    assert len(out) == 4

@@ -57,6 +57,9 @@ def test_registry_notes_match_code():
     # io rows state their format envelope truthfully
     assert "0-10" in TOOLS["LasToAscii"]["engine"]  # LAS point formats
     assert "BigTIFF" in TOOLS["ConvertRasterFormat"]["engine"]
+    # the medoid is a window argmin, not a kNN join
+    assert "knn_join" not in TOOLS["Medoid"]["engine"]
+    assert "q_medoid" in TOOLS["Medoid"]["engine"]
 
 
 def test_deviating_rows_cite_reference_lines():

@@ -80,27 +80,6 @@ def explode_neighbors(
     ).drop("o")
 
 
-def ring_cells(
-    df: DataFrame, shell: int, prefix: str = "cell", out: str = "probe_key"
-) -> DataFrame:
-    """Explode each row to the cells of chebyshev ring ``shell`` exactly
-    (|di|==shell or |dj|==shell) — one kNN expansion round."""
-    offs = [
-        (di, dj)
-        for di in range(-shell, shell + 1)
-        for dj in range(-shell, shell + 1)
-        if abs(di) == shell or abs(dj) == shell
-    ]
-    offsets = F.array(
-        *[F.struct(F.lit(a).alias("di"), F.lit(b).alias("dj")) for a, b in offs]
-    )
-    ex = df.select("*", F.explode(offsets).alias("o"))
-    return ex.withColumn(
-        out,
-        pack_cell(F.col(f"{prefix}_i") + F.col("o.di"), F.col(f"{prefix}_j") + F.col("o.dj")),
-    ).drop("o")
-
-
 def with_salt(df: DataFrame, id_col: str, n_salt: int = 8, out: str = "salt") -> DataFrame:
     """Append a deterministic per-row salt in [0, n_salt) derived from
     ``id_col`` — stage one of two-stage skew handling for a hot

@@ -147,18 +147,18 @@ def idw_grid(
     near = radius_join(points, cells, radius, x=x, y=y).select(
         "cell", "dist", f"{z}_p"
     )
-    direct = _idw_agg(near, weight, min_points, z)
+    values = _idw_agg(near, weight, min_points, z)
 
-    # kNN fallback for cells the radius search under-populated
-    counts = near.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
-    filled = counts.where(F.col("_n") >= min_points).select("cell")
-    short_cells = cells.join(filled, "cell", "left_anti")
-    fb = knn_join(
-        points, short_cells, k=min_points, radius=radius, query_id="cell", x=x, y=y
-    ).select("cell", "dist", f"{z}_p")
-    fallback = _idw_agg(fb, weight, min_points, z)
-
-    values = direct.unionByName(fallback)
+    # kNN fallback for cells the radius search under-populated; there is
+    # none when min_points < 1 (a kNN of fewer than one point is empty)
+    if min_points >= 1:
+        counts = near.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
+        filled = counts.where(F.col("_n") >= min_points).select("cell")
+        short_cells = cells.join(filled, "cell", "left_anti")
+        fb = knn_join(
+            points, short_cells, k=min_points, radius=radius, query_id="cell", x=x, y=y
+        ).select("cell", "dist", f"{z}_p")
+        values = values.unionByName(_idw_agg(fb, weight, min_points, z))
     return cells.join(values, "cell", "left").select("cell", "row", "col", "value")
 
 

@@ -282,6 +282,8 @@ def clip_points(
 ) -> DataFrame:
     """Spatial semi/anti join of a point table against a broadcast layer:
     the points whose clip tag (module table) is set, resp. not set."""
+    if mode not in get_args(Mode):
+        raise ValueError(f"unknown mode {mode!r}; expected one of {', '.join(get_args(Mode))}")
     inside = F.col(_TAG).isNotNull()
     tagged = _tag(points, layer, "clip", part_mode, x, y, _TAG, strategy)
     return tagged.where(inside if mode == "semi" else ~inside).drop(_TAG)

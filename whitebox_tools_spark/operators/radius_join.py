@@ -14,32 +14,39 @@ Scale design:
   equi-join on the packed cell key. The explode happens before the
   exchange so Catalyst sees a plain equi-join; AQE skew-join splits hot
   cells at runtime.
-- knn join ('stats' strategy, default): the per-cell count table (tiny —
-  one row per OCCUPIED cell, it is the spatial histogram, not the data) is
-  collected and broadcast; a vectorized pandas UDF replays the reference's
-  ring expansion against the histogram to find each query's stop shell and
-  emits exactly the non-empty candidate cells (pruning empty cells cuts
-  the subsequent join fan-out massively in sparse regions). Then ONE hash
-  join + window top-k. Two shuffles, zero driver iteration, independent of
-  how many shells any query needs.
-- knn join ('loop' strategy): bounded driver loop joining only unfilled
-  queries per shell — for when the cell histogram itself is too large to
-  broadcast (extremely fine radius at extreme scale). Same semantics.
+- knn join: one lazy plan of equi-joins, with no driver action and no
+  Python. A query cell's stop shell s* is the first chebyshev shell (the
+  3x3 block is shell 1) whose running point count reaches k. It is found
+  with a count pyramid over the OCCUPIED cells: the cell histogram
+  (i, j, n) is exploded to levels l = 0..32 as (l, i >> l, j >> l) and
+  summed per coarse cell. The shifts are signed, so negative cells floor.
+  At level 32 every packable cell (|i| < 2^31) lies in the 2x2 block
+  {-1, 0}^2, so there the 3x3 block around any query cell holds every
+  point.
+  - pick the level: each coarse cell's 3x3 block count C_l (its 9
+    neighbours exploded and summed) is kept where it reaches k, and at
+    level 32 always. Each distinct query cell looks its own coarse cell
+    up at the 33 levels (one equi-join); l* is the smallest level found.
+  - why that bounds s*: the 3x3 coarse block at level l holds every cell
+    within chebyshev distance 2^l of the query cell and lies within
+    2^(l+1) - 1, so s* <= 2^(l*+1) - 1. The 5x5 coarse block at l* holds
+    every cell within 2^(l*+1), so each shell up to s* is complete in it.
+  - exact stop: equi-join that 5x5 block against the level rows to get
+    the occupied candidate cells, and keep a cell when the points in the
+    shells strictly inside its own shell number fewer than k (a running
+    sum per query cell). Those are exactly the cells of shell <= s*, or
+    every candidate when fewer than k points exist.
+  The candidate set is bounded by occupied cells, never by empty area.
+  Then ONE hash join of the query rows to the points of their candidate
+  cells, and a window top-k.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from whitebox_tools_spark.operators.cells import (
-    MASK32,
-    explode_neighbors,
-    ring_cells,
-    with_cell,
-)
+from whitebox_tools_spark.operators.cells import explode_neighbors, pack_cell, with_cell
 
 
 def _d2_mul(x: str, y: str):
@@ -85,60 +92,70 @@ def radius_join(
     return out.withColumn("dist", dist)
 
 
-def _cell_histogram(
-    points: DataFrame, radius: float, x: str, y: str, max_cells: int | None = None
-) -> dict[int, int] | None:
-    """Per-cell occupancy counts in ONE scan of the point table. When
-    ``max_cells`` is given, collects through a LIMIT max_cells+1 sentinel
-    and returns None if the occupancy exceeds it (caller falls back to
-    the distributed loop) — no separate distinct-count pre-pass."""
-    agg = (
+# level l maps cell i to coarse cell i >> l; level 32 puts every packable
+# cell (|i| < 2^31) into one 2x2 block
+_TOP_LEVEL = 32
+
+
+def _at_level(df: DataFrame, i: str, j: str) -> DataFrame:
+    """Appends ``l_i`` / ``l_j``: cell (i, j) at level ``lvl`` (a signed
+    shift, so negative cells floor)."""
+    return df.withColumn(
+        "l_i", F.call_function("shiftright", F.col(i), F.col("lvl"))
+    ).withColumn("l_j", F.call_function("shiftright", F.col(j), F.col("lvl")))
+
+
+def _every_level(df: DataFrame) -> DataFrame:
+    return df.select("*", F.explode(F.sequence(F.lit(0), F.lit(_TOP_LEVEL))).alias("lvl"))
+
+
+def _candidate_cells(
+    points: DataFrame, qcells: DataFrame, k: int, radius: float, x: str, y: str
+) -> DataFrame:
+    """(qcell_key, probe_key): for each distinct query cell, the occupied
+    cells of shell <= its stop shell (module docstring)."""
+    hist = (
         with_cell(points, radius, x, y, prefix="c")
-        .groupBy("c_key")
+        .groupBy("c_i", "c_j")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    if max_cells is not None:
-        counts = agg.limit(max_cells + 1).collect()
-        if len(counts) > max_cells:
-            return None
-    else:
-        counts = agg.collect()
-    return {r["c_key"]: r["n"] for r in counts}
+    levels = _at_level(_every_level(hist), "c_i", "c_j")
+    coarse = levels.groupBy("lvl", "l_i", "l_j").agg(F.sum("n").alias("n"))
+    # the coarse cells whose 3x3 block count C_l reaches k; every cell at
+    # the top level is kept, so each query cell has a level when points exist
+    reach = (
+        explode_neighbors(coarse, steps=1, prefix="l", out="lkey")
+        .groupBy("lvl", "lkey")
+        .agg(F.sum("n").alias("c"))
+        .where((F.col("c") >= k) | (F.col("lvl") == _TOP_LEVEL))
+    )
+    q_lvl = _at_level(_every_level(qcells), "qcell_i", "qcell_j").withColumn(
+        "lkey", pack_cell(F.col("l_i"), F.col("l_j"))
+    )
+    picked = (
+        q_lvl.join(reach, ["lvl", "lkey"], "left_semi")
+        .groupBy(*qcells.columns)
+        .agg(F.min("lvl").alias("lvl"))
+    )
 
-
-def _stop_shell_and_cells(hist: dict[int, int], qi: int, qj: int, k: int):
-    """Replay fixed_radius_search.rs:134-218 against the cell histogram:
-    expand shells until cumulative count >= k; return candidate cell keys
-    (non-empty only)."""
-    cells: list[int] = []
-    total = 0
-    # 3x3 start block (shell <= 1)
-    for di in (-1, 0, 1):
-        for dj in (-1, 1, 0):
-            key = ((qi + di) << 32) | ((qj + dj) & MASK32)
-            n = hist.get(key)
-            if n:
-                cells.append(key)
-                total += n
-    shell = 2
-    # bound: expand at most until every occupied cell would be covered
-    max_needed = len(hist)
-    seen_cells = len(cells)
-    while total < k and seen_cells < max_needed:
-        s = shell
-        for di in range(-s, s + 1):
-            for dj in range(-s, s + 1):
-                if abs(di) == s or abs(dj) == s:
-                    key = ((qi + di) << 32) | ((qj + dj) & MASK32)
-                    n = hist.get(key)
-                    if n:
-                        cells.append(key)
-                        total += n
-        seen_cells = len(cells)
-        shell += 1
-        if shell > 1 << 20:  # safety bound
-            break
-    return cells
+    fine = levels.select(
+        "lvl", pack_cell(F.col("l_i"), F.col("l_j")).alias("lkey"), "c_i", "c_j", "n"
+    )
+    cand = explode_neighbors(
+        _at_level(picked, "qcell_i", "qcell_j"), steps=2, prefix="l", out="lkey"
+    ).join(fine, ["lvl", "lkey"])
+    shell = F.greatest(
+        F.abs(F.col("c_i") - F.col("qcell_i")), F.abs(F.col("c_j") - F.col("qcell_j")), F.lit(1)
+    )
+    inner = Window.partitionBy("qcell_key").orderBy("shell").rangeBetween(
+        Window.unboundedPreceding, -1
+    )
+    return (
+        cand.withColumn("shell", shell)
+        .withColumn("_inner", F.coalesce(F.sum("n").over(inner), F.lit(0)))
+        .where(F.col("_inner") < k)
+        .select("qcell_key", pack_cell(F.col("c_i"), F.col("c_j")).alias("probe_key"))
+    )
 
 
 def knn_join(
@@ -149,10 +166,6 @@ def knn_join(
     query_id: str = "qid",
     x: str = "x",
     y: str = "y",
-    squared: bool = False,
-    strategy: str = "stats",
-    max_hist_cells: int = 4_000_000,
-    max_fallback_pairs: int = 100_000_000,
 ) -> DataFrame:
     """Approximate kNN join with the reference's shell-stop semantics.
 
@@ -160,159 +173,26 @@ def knn_join(
     (1..k by ascending distance; reference tie order — cell probe order —
     is replaced by a deterministic (d2, x_p, y_p) sort; compare
     order-insensitively).
-
-    ``max_fallback_pairs`` bounds the loop strategy's last-resort
-    direct join for queries whose rings never reached k points (far
-    outside the point extent): if remaining-queries × points exceeds
-    it, the join raises instead of silently going quadratic.
     """
-    if strategy == "loop":
-        return _knn_join_loop(points, queries, k, radius, query_id, x, y,
-                              squared, max_fallback_pairs)
-
-    spark = points.sparkSession
-    # size-guard the driver-side histogram in the SAME single scan that
-    # builds it (LIMIT max_hist_cells+1 sentinel): one row per OCCUPIED
-    # cell; if the occupancy is too large to broadcast comfortably, fall
-    # back to the distributed loop strategy instead of OOMing the driver
-    hist = _cell_histogram(points, radius, x, y, max_cells=max_hist_cells)
-    if hist is None:
-        return _knn_join_loop(points, queries, k, radius, query_id, x, y,
-                              squared, max_fallback_pairs)
-    bc = spark.sparkContext.broadcast(hist)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def candidate_cells(qis: pd.Series, qjs: pd.Series) -> pd.Series:
-        h = bc.value
-        return pd.Series(
-            [_stop_shell_and_cells(h, int(a), int(b), k) for a, b in zip(qis, qjs)]
-        )
-
+    if k < 1:
+        raise ValueError(f"knn_join needs k >= 1, got {k}")
     pts = _prep_points(points, radius, x, y)
-    # every query in a cell shares the same candidate set, so the ring
-    # replay runs ONCE per DISTINCT occupied query cell (the spatial
-    # histogram scale, not the query-row scale) and joins back — at
-    # 10^12 query rows the Python replay cost is bounded by cell
-    # occupancy, not row count
-    q = with_cell(queries, radius, x, y, prefix="_qc")
-    dcells = (
-        q.select("_qc_i", "_qc_j", "_qc_key")
-        .distinct()
-        .select(
-            "_qc_key",
-            candidate_cells(F.col("_qc_i"), F.col("_qc_j")).alias("_cand"),
-        )
+    q = with_cell(queries, radius, x, y, prefix="qcell")
+    # every query in a cell shares one candidate set, so the stop shell is
+    # found once per DISTINCT query cell and joined back
+    cand = _candidate_cells(
+        points, q.select("qcell_i", "qcell_j", "qcell_key").distinct(), k, radius, x, y
     )
-    probe = (
-        q.join(dcells, "_qc_key")
-        .select("*", F.explode("_cand").alias("probe_key"))
-        .drop("_cand", "_qc_key", "_qc_i", "_qc_j")
-    )
+    probe = q.join(cand, "qcell_key").drop("qcell_key", "qcell_i", "qcell_j")
     joined = probe.join(pts, probe.probe_key == pts.cell_key_p, "inner").drop(
         "probe_key", "cell_key_p"
     )
-    d2 = _d2_mul(x, y)
     w = Window.partitionBy(query_id).orderBy(
         F.col("_d2").asc(), F.col(f"{x}_p"), F.col(f"{y}_p")
     )
     ranked = (
-        joined.withColumn("_d2", d2)
+        joined.withColumn("_d2", _d2_mul(x, y))
         .withColumn("knn_rank", F.row_number().over(w))
         .where(F.col("knn_rank") <= k)
     )
-    dist = F.col("_d2") if squared else F.sqrt(F.col("_d2"))
-    return ranked.withColumn("dist", dist).drop("_d2")
-
-
-def _knn_join_loop(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    radius: float,
-    query_id: str,
-    x: str,
-    y: str,
-    squared: bool,
-    max_fallback_pairs: int = 100_000_000,
-) -> DataFrame:
-    """Driver-loop kNN (for when the cell histogram can't broadcast)."""
-    pts = _prep_points(points, radius, x, y)
-    ext = with_cell(points, radius, x, y, prefix="c").agg(
-        F.min("c_i"), F.max("c_i"), F.min("c_j"), F.max("c_j")
-    ).collect()[0]
-    max_shell = (
-        1 if ext[0] is None else int(max(ext[1] - ext[0], ext[3] - ext[2]) + 2)
-    )
-
-    q = with_cell(queries, radius, x, y, prefix="qcell")
-    unfilled = q
-    acc: DataFrame | None = None
-    done_parts: list[DataFrame] = []
-    d2_expr = _d2_mul(x, y)
-
-    for shell in range(1, max_shell + 1):
-        if shell == 1:
-            probe = explode_neighbors(unfilled, steps=1, prefix="qcell")
-        else:
-            probe = ring_cells(unfilled, shell, prefix="qcell")
-        cand = (
-            probe.join(pts, probe.probe_key == pts.cell_key_p, "inner")
-            .drop("probe_key", "cell_key_p")
-            .withColumn("_d2", d2_expr)
-        )
-        acc = cand if acc is None else acc.unionByName(cand)
-        acc = acc.localCheckpoint(eager=True)
-
-        counts = acc.groupBy(query_id).agg(F.count(F.lit(1)).alias("_n"))
-        filled_ids = counts.where(F.col("_n") >= k).select(query_id)
-        remaining = unfilled.join(filled_ids, query_id, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # no broadcast hint: filled_ids scales with the query-row count
-        # (the very thing this strategy exists to avoid collecting)
-        done_parts.append(acc.join(filled_ids, query_id, "left_semi"))
-        if remaining.limit(1).count() == 0:
-            break
-        if shell == max_shell:
-            # queries whose rings never accumulated k candidates (e.g.
-            # far outside the point extent — the point-extent shell bound
-            # cannot reach them): finish them with a direct join against
-            # the full point table. This replaces (not augments) their
-            # partial ring candidates so no row double-counts. The pair
-            # volume is remaining × points — fine for a handful of
-            # outlier queries, quadratic if the query extent is largely
-            # disjoint from the point extent, so it is capped
-            # (ADVICE r4 #4): above the cap, raise rather than silently
-            # launch a full product.
-            n_remaining = remaining.count()
-            n_pts = pts.count()
-            if n_remaining * n_pts > max_fallback_pairs:
-                raise ValueError(
-                    f"kNN loop fallback would join {n_remaining} "
-                    f"never-filled queries against {n_pts} points "
-                    f"({n_remaining * n_pts} pairs > max_fallback_pairs="
-                    f"{max_fallback_pairs}); the query extent is largely "
-                    "disjoint from the point extent — use a larger radius "
-                    "(bigger cells) or raise max_fallback_pairs."
-                )
-            done_parts.append(
-                remaining.crossJoin(pts.drop("cell_key_p"))
-                .withColumn("_d2", d2_expr)
-            )
-            break
-        acc = acc.join(filled_ids, query_id, "left_anti")
-        unfilled = remaining
-
-    result = done_parts[0]
-    for part in done_parts[1:]:
-        result = result.unionByName(part)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("_d2").asc(), F.col(f"{x}_p"), F.col(f"{y}_p")
-    )
-    ranked = result.withColumn("knn_rank", F.row_number().over(w)).where(
-        F.col("knn_rank") <= k
-    )
-    dist = F.col("_d2") if squared else F.sqrt(F.col("_d2"))
-    return ranked.withColumn("dist", dist).drop(
-        "_d2", "qcell_i", "qcell_j", "qcell_key"
-    )
+    return ranked.withColumn("dist", F.sqrt(F.col("_d2"))).drop("_d2")
