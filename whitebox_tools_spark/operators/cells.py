@@ -63,14 +63,17 @@ def explode_neighbors(
 
     steps=2 is the reference's 5x5 radius probe; steps=1 the 3x3 kNN start
     block. One explode of a precomputed offset array (not two nested) keeps
-    the plan to a single Generate node.
+    the plan to a single Generate node. The array is one SQL literal: built
+    column by column it costs a JVM round trip per offset.
     """
-    offsets = F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
+    offsets = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('di', {di}, 'dj', {dj})"
             for dj in range(-steps, steps + 1)
             for di in range(-steps, steps + 1)
-        ]
+        )
+        + ")"
     )
     o = F.explode(offsets).alias("o")
     ex = df.select("*", o)
